@@ -312,41 +312,8 @@ object Bench {
     // the summary line must stay bounded: cap the error-key list at 20
     // (errors_count already carries the true total)
     val errKeysCapped = errKeysAll.take(20).map(jstr).mkString("[", ",", "]")
-    // the r13 drift bisect, recorded in-artifact: the four r12 min-time
-    // regressions on untouched operators all RECOVERED to r11 levels
-    // in r13's first full run (dedup_containment 1.64 med / 1.50 min vs
-    // r11 1.50), while that run inflated a DIFFERENT key set 2-4x in
-    // situ — every one of which matched its r11 figure when re-run
-    // isolated. Conclusion: roving session noise, not plan cost; prime
-    // suspect the 1-min periodic full GC landing mid-rep, now stretched
-    // to 30min with the steady drain moved to the untimed per-4-key GC.
-    val bisectNote =
-      "r16 bisect of the broad ~1.2x min-sum inflation vs r15 committed " +
-        "(137.9 vs 119.0): ENVIRONMENTAL host state, not plan cost - a " +
-        "same-host A/B (r16 HEAD vs an r15-HEAD worktree, identical " +
-        "fresh-JVM subset probes, back to back) ran r16 FASTER-or-equal on " +
-        "every suspect key (dedup_weighted_sample 1.64s vs 5.04, " +
-        "ann_drift_report 0.38 vs 0.94, dedup_weights 1.48 vs 2.44; " +
-        "calibration keys within noise), and the r16 scaling audit flagged " +
-        "zero keys across 11 axes. Adjudicate cross-round drift against " +
-        "same-session relatives and the A/B, not committed absolutes. " +
-      "(r15 note retained:) r15 bisect of the r13->r14 vocab_coverage/pivot_points min drift " +
-        "(0.211->0.327, 0.334->0.458): ENVIRONMENTAL session-warmth, not plan " +
-        "cost - no plan change in either round's diff, and fresh-JVM subset " +
-        "probes on an IDLE machine (load 1.3) inflate UNTOUCHED calibration " +
-        "keys identically (moving_avg 0.303s vs 0.093 committed min, " +
-        "q15_top_supplier 0.849 vs 0.376, ~3x), so sub-second absolutes track " +
-        "JIT/session state; the committed full-run figures shift with surface " +
-        "growth (334->346->353 keys changes what has run before these keys in " +
-        "the session). CONFIRMED by r15's full run: both keys recovered with " +
-        "no code change to them (vocab_coverage min 0.327->0.267, " +
-        "pivot_points 0.458->0.328 - r13 levels). Adjudicate sub-second keys " +
-        "on same-session relatives. " +
-        "(r14 note retained: isolated map publishes fresh-session MINs with " +
-        "per-suspect interleaved warmups, now with isolated_reps spreads; " +
-        "adjudicate regressions against committed mins)"
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","bisect":${jstr(bisectNote)},"errors":$errs,"noise":$ns,"min":$mins,"isolated":$iso,"isolated_reps":$isoReps,"isolated_errors":$isoErrs,"queries":$qs,"errors_count":$nErrs,"error_keys":$errKeys}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","errors":$errs,"noise":$ns,"min":$mins,"isolated":$iso,"isolated_reps":$isoReps,"isolated_errors":$isoErrs,"queries":$qs,"errors_count":$nErrs,"error_keys":$errKeys}"""
     try {
       val w = new java.io.PrintWriter("BENCH_LATEST.json")
       try w.println(full) finally w.close()

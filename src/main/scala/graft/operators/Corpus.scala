@@ -242,7 +242,7 @@ object Corpus {
     */
   def loadBpeModel(spark: org.apache.spark.sql.SparkSession,
                    path: String): Seq[(String, String)] =
-    spark.read.parquet(path)
+    graft.sources.Tables.parquet(spark, path)
       .orderBy("rank")
       .collect()
       .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))

@@ -1143,12 +1143,13 @@ object Dedup {
     // and appendBucketed fails loudly on a mismatched bucket spec
     val buckets =
       if (fs.exists(p(s"$dir/meta")))
-        spark.read.parquet(s"$dir/meta").head().getAs[Int]("num_buckets")
+        graft.sources.Tables.parquet(spark, s"$dir/meta").head()
+          .getAs[Int]("num_buckets")
       else numBuckets
-    spark.read.parquet(s"$dir/stale")
+    graft.sources.Tables.parquet(spark, s"$dir/stale")
       .write.mode("append").format("parquet")
       .saveAsTable(staleClusterTable(table))
-    val rows = spark.read.parquet(s"$dir/rows")
+    val rows = graft.sources.Tables.parquet(spark, s"$dir/rows")
     val todo = rows.join(
       spark.table(table).select("doc_id", "cluster_id"),
       Seq("doc_id", "cluster_id"), "left_anti")

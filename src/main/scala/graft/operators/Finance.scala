@@ -48,11 +48,11 @@ object Finance {
   // immutable-buffer type, which disqualifies HashAggregate — the
   // whole tick→bar aggregate fell into SortAggregate (sorting every
   // tick by (series, day), twice — measured ~45% of the aggregate,
-  // BarProbe); a typed-imperative argmax fixes the sort but drops
-  // whole-stage codegen for the h/l/count legs (BarProbe: 0.56 s vs
-  // 0.46 s packed vs 0.58 s sort at sf0.1). A decimal(38,0) buffer is
-  // UnsafeRow-mutable, so max(pk) keeps the aggregate in codegen'd
-  // HashAggregate with map-side partials — the only shape that
+  // OPTIMIZATION_r17.md §2); a typed-imperative argmax fixes the sort
+  // but drops whole-stage codegen for the h/l/count legs (same §:
+  // 0.56 s vs 0.46 s packed vs 0.58 s sort at sf0.1). A decimal(38,0)
+  // buffer is UnsafeRow-mutable, so max(pk) keeps the aggregate in
+  // codegen'd HashAggregate with map-side partials — the only shape that
   // survives 100 TB of ticks. Domain (same class the padded string
   // had via its lpad widths, now explicit): 0 ≤ micros < 10¹⁶
   // (ts before year ~2286, and < ~10¹⁵·6 for the 38-digit cap ⇒

@@ -130,7 +130,7 @@ object Lifecycle {
                                             processed: DataFrame,
                                             to: String): Unit = {
     val fs = graft.sources.IndexMaintenance.fsFor(spark, path)
-    val cur = spark.read.parquet(path)
+    val cur = graft.sources.Tables.parquet(spark, path)
     val next = advance(cur, processed, to)
     // partitions that change: where processed docs currently sit
     // (they leave) + the destination. Bounded by the ladder length —

@@ -294,7 +294,7 @@ object Similarity {
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queryId: Long, k: Int, nProbe: Int = 4): DataFrame = {
-    val cents = spark.read.parquet(s"$path/codebook")
+    val cents = graft.sources.Tables.parquet(spark, s"$path/codebook")
       .orderBy("list_id").collect().map(vecOf(_, "cent"))
     probeTopK(liveAssigned(spark, path), cents, queryId, k, nProbe)
   }
@@ -354,11 +354,11 @@ object Similarity {
     */
   private def readTwoLevelBooks(spark: org.apache.spark.sql.SparkSession,
                                 path: String): TwoLevelBooks = {
-    val cRows = spark.read.parquet(s"$path/codebook_coarse")
+    val cRows = graft.sources.Tables.parquet(spark, s"$path/codebook_coarse")
       .orderBy("coarse_id").collect()
     val coarse = cRows.map(vecOf(_, "cent"))
     val nFine = cRows.map(_.getAs[Int]("n_fine"))
-    val flat = spark.read.parquet(s"$path/codebook")
+    val flat = graft.sources.Tables.parquet(spark, s"$path/codebook")
       .orderBy("list_id").collect().map(vecOf(_, "cent"))
     val g = flat.length / coarse.length
     val fine: Array[Array[Array[Double]]] = Array.tabulate(coarse.length) { c =>
@@ -383,7 +383,7 @@ object Similarity {
     if (isTwoLevelIndex(spark, path))
       assignTwoLevel(newVecs, readTwoLevelBooks(spark, path))
     else {
-      val cents = spark.read.parquet(s"$path/codebook")
+      val cents = graft.sources.Tables.parquet(spark, s"$path/codebook")
         .orderBy("list_id").collect().map(vecOf(_, "cent"))
       assignLists(newVecs, cents)
     }
@@ -410,7 +410,7 @@ object Similarity {
                      queryCap: Long = 500): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val assigned = liveAssigned(spark, path)
-    val centDf = spark.read.parquet(s"$path/codebook")
+    val centDf = graft.sources.Tables.parquet(spark, s"$path/codebook")
     val queries = assigned
       .filter(col("vec_id") % queryMod === 0 && col("vec_id") < queryCap)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -1130,7 +1130,7 @@ object Similarity {
     */
   def ivfTopKExactIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                           queryId: Long, k: Int, nProbe: Int = 4): DataFrame = {
-    val cents = spark.read.parquet(s"$path/codebook")
+    val cents = graft.sources.Tables.parquet(spark, s"$path/codebook")
       .orderBy("list_id").collect().map(vecOf(_, "cent"))
     exactProbe(liveAssigned(spark, path), cents, queryId, k, nProbe)
   }

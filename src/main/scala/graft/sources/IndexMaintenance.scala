@@ -169,7 +169,7 @@ object IndexMaintenance {
       return false
     }
     val committedForThis = f.exists(p(commitDir)) && {
-      val id = spark.read.parquet(s"$commitDir/id").head()
+      val id = Tables.parquet(spark, s"$commitDir/id").head()
       val same = id.getAs[String]("stream_id") == streamId &&
         id.getAs[Long]("batch_id") == batchId
       if (!same) {
@@ -200,7 +200,7 @@ object IndexMaintenance {
     foldInto(f, p(tableLocation(spark, stagingTable)),
       p(tableLocation(spark, table)))
     spark.catalog.refreshTable(table)
-    val props = spark.read.parquet(s"$commitDir/props").collect()
+    val props = Tables.parquet(spark, s"$commitDir/props").collect()
       .map(r => r.getString(0) -> r.getString(1))
     if (props.nonEmpty) spark.sql(
       s"ALTER TABLE $table SET TBLPROPERTIES " +
@@ -424,18 +424,20 @@ object IndexMaintenance {
     val f = fsFor(spark, indexDir)
     def ex(sub: String) =
       f.exists(new org.apache.hadoop.fs.Path(s"${indexDir.stripSuffix("/")}/$sub"))
-    val rows = spark.read.parquet(dataDir)
+    val rows = Tables.parquet(spark, dataDir)
     val n = rows.count()
     val tombPresent =
       if (ex("tombstones"))
         rows.select(idCol)
-          .join(broadcast(spark.read.parquet(s"$indexDir/tombstones").select(idCol)),
+          .join(broadcast(
+            Tables.parquet(spark, s"$indexDir/tombstones").select(idCol)),
             Seq(idCol), "left_semi")
           .distinct().count()
       else 0L
     val live = liveRowsAt(spark, dataDir, indexDir, idCol).count()
     val marks =
-      if (ex("applied_batches")) spark.read.parquet(s"$indexDir/applied_batches").count()
+      if (ex("applied_batches"))
+        Tables.parquet(spark, s"$indexDir/applied_batches").count()
       else 0L
     val staged = ex("_staging") || ex("_retrain_commit")
     val lease = ex("_writer_lease")
@@ -490,7 +492,7 @@ object IndexMaintenance {
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
     val done = f.exists(dirPath) && hasCommittedFiles &&
-      spark.read.parquet(dir)
+      Tables.parquet(spark, dir)
         .filter(col("stream_id") === streamId && col("batch_id") === batchId)
         .head(1).nonEmpty
     if (!done) {
@@ -547,7 +549,7 @@ object IndexMaintenance {
           val n = st.getPath.getName
           st.isFile && !n.startsWith("_") && !n.startsWith(".")
         } &&
-        spark.read.parquet(marksDir)
+        Tables.parquet(spark, marksDir)
           .filter(col("stream_id") === streamId && col("batch_id") === batchId)
           .head(1).nonEmpty
     }
@@ -608,10 +610,10 @@ object IndexMaintenance {
     */
   def liveRowsAt(spark: SparkSession, dataDir: String, indexDir: String,
                  idCol: String): DataFrame = {
-    val t = spark.read.parquet(dataDir)
+    val t = Tables.parquet(spark, dataDir)
     val tomb = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
     if (fsFor(spark, indexDir).exists(tomb))
-      t.join(broadcast(spark.read.parquet(tomb.toString).select(idCol)),
+      t.join(broadcast(Tables.parquet(spark, tomb.toString).select(idCol)),
         Seq(idCol), "left_anti")
     else t
   }

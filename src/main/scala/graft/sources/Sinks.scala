@@ -34,10 +34,16 @@ object Sinks {
       .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   /** Read a partitioned table back (partition columns are recovered
-    * from the directory layout and prune on filter).
+    * from the directory layout and prune on filter). Opens through
+    * [[Tables.parquet]]: the driver reads the one footer Spark's
+    * inference would (the data file with the smallest path, unless a
+    * `_common_metadata`/`_metadata` summary exists) instead of starting
+    * a Spark job for it. Partition columns are not in any footer — they
+    * are left to Spark, which types them from the directory names
+    * exactly as an inferred read does.
     */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
 
   /** Read a table whose schema DRIFTED across its ingest history
@@ -46,7 +52,9 @@ object Sinks {
     * fills the columns older files lack. mergeSchema costs a footer
     * read per file — acceptable on a compacted table, pathological on
     * millions of un-compacted fragments, which is one more reason
-    * [[compact]] exists.
+    * [[compact]] exists. This is the one read that stays on Spark's own
+    * inference (not [[Tables.parquet]]): a merged schema needs every
+    * footer, which Spark reads in parallel tasks.
     */
   def readMerged(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
@@ -82,7 +90,7 @@ object Sinks {
     // reading — the read must see a complete serving copy
     IndexMaintenance.recoverDirSwap(fs, path)
     val tmp = path.stripSuffix("/") + "_compact_tmp"
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
     val parts = partitionCols.map(df.col)
     // hash-clustering on the partition columns lands each partition
     // value in one task → one file per directory (for a partition too

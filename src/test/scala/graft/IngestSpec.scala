@@ -1,8 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.SparkThrowable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.Ingest
+import graft.sources.{Ingest, Sinks, Tables}
 
 class IngestSpec extends SparkSpec {
 
@@ -160,5 +164,160 @@ class IngestSpec extends SparkSpec {
     val probe = back.filter(col("month") === "1996-03")
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: ["), s"no partition filter:\n$plan")
+  }
+
+  // ---- Tables.parquet: the schema comes from a footer read on the driver ----
+
+  /** `df` has exactly what `spark.read.parquet(path)` gives: schema and rows. */
+  private def sameAsSpark(path: String, df: DataFrame): Unit = {
+    val ref = spark.read.parquet(path)
+    assert(df.schema === ref.schema, path)
+    assert(df.collect().toSeq === ref.collect().toSeq, path)
+  }
+
+  /** The one data file `dir` holds (a single-partition write). */
+  private def partFile(dir: String): java.nio.file.Path =
+    new java.io.File(dir).listFiles().find(_.getName.startsWith("part-")).get.toPath
+
+  test("Tables.parquet: every Tables loader reads Spark's own schema and rows") {
+    val loaders = Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
+      "region" -> Tables.region, "nation" -> Tables.nation, "customer" -> Tables.customer,
+      "supplier" -> Tables.supplier, "part" -> Tables.part, "orders" -> Tables.orders,
+      "lineitem" -> Tables.lineitem, "documents" -> Tables.documents,
+      "embeddings" -> Tables.embeddings,
+      "events" -> ((s, d) => Tables.table(s, d, "events")))
+    loaders.foreach { case (name, load) =>
+      sameAsSpark(s"$sfDir/$name.parquet", load(spark, sfDir)) }
+    // the corpus' events.ts is a TIMESTAMP(MICROS) NTZ column
+    assert(Tables.events(spark, sfDir).schema("ts").dataType === TimestampType)
+  }
+
+  test("Tables.parquet: a TIMESTAMP(NANOS) events.ts types as the session's nanosAsLong says") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_nanos").toString
+    val path = s"$dir/events.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val nanos = Seq(1L -> 1700000000123456789L, 2L -> 1700000001987654321L)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try nanos.foreach { case (id, ns) =>
+      w.write(rows.newGroup().append("event_id", id).append("ts", ns))
+    } finally w.close()
+    // the shared session sets spark.sql.legacy.parquet.nanosAsLong=true:
+    // the footer converter must honor it exactly as inference does
+    val raw = Tables.table(spark, dir, "events")
+    assert(raw.schema("ts").dataType === LongType)
+    // ... from the footer itself, not by falling back to inference
+    assert(jobsStartedBy(Tables.table(spark, dir, "events")) === 0)
+    sameAsSpark(path, raw)
+    val ev = Tables.events(spark, dir)
+    assert(ev.schema("ts").dataType === TimestampType)
+    val micros = ev.orderBy("event_id").select(unix_micros(col("ts"))).collect()
+    assert(micros.map(_.getLong(0)).toSeq === nanos.map(_._2 / 1000))
+  }
+
+  test("Tables.parquet: a Sinks table reads like Spark after upsertPartitions and compact") {
+    val dir = Files.createTempDirectory("graft_sinks_read").toString + "/t"
+    val src = Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"), col("o_totalprice"),
+        year(col("o_orderdate")).cast("string").as("o_year"))
+    Sinks.writePartitioned(src, dir, Seq("o_year"))
+    sameAsSpark(dir, Sinks.readPartitioned(spark, dir))
+    // the partition column still comes from the directory names, typed as inference types it
+    assert(Sinks.readPartitioned(spark, dir).schema("o_year").dataType === IntegerType)
+    val year1995 = src.filter(col("o_year") === "1995")
+    val bumped = (col("o_totalprice") + 1).cast(src.schema("o_totalprice").dataType)
+    Sinks.upsertPartitions(year1995.withColumn("o_totalprice", bumped), dir, Seq("o_year"))
+    val upserted = Sinks.readPartitioned(spark, dir)
+    sameAsSpark(dir, upserted)
+    // a fresh listing: the upserted rows are what the read serves
+    assert(upserted.filter(col("o_year") === 1995).agg(sum("o_totalprice")).head().get(0) ===
+      year1995.agg(sum(bumped)).head().get(0))
+    Sinks.compact(spark, dir, Seq("o_year"))
+    sameAsSpark(dir, Sinks.readPartitioned(spark, dir))
+    assert(Sinks.readPartitioned(spark, dir).count() === src.count())
+  }
+
+  /** Spark jobs `body` starts on this thread (other suites may share the
+    * session, so jobs are told apart by job group). Listener events
+    * arrive in order: once a marker job run after `body` is seen, every
+    * start `body` caused has been seen too. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val group = s"graft-jobs-started-by-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group)).foreach(starts.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!starts.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.contains(marker), "listener never saw the marker job")
+      starts.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.parquet builds its DataFrame without starting a Spark job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_no_job").toString + "/t"
+    Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
+      .write.partitionBy("k").parquet(dir)
+    val paths = Seq(s"$sfDir/orders.parquet", s"$sfDir/events.parquet", dir)
+    // control: Spark's inferring read starts a job per open, so the count sees builds
+    assert(jobsStartedBy(paths.foreach(spark.read.parquet(_))) >= paths.size)
+    assert(jobsStartedBy(paths.foreach(Tables.parquet(spark, _))) === 0)
+  }
+
+  test("Tables.parquet fails like spark.read.parquet on a missing path and a _SUCCESS-only dir") {
+    val missing = Files.createTempDirectory("graft_missing").toString + "/absent"
+    val empty = Files.createTempDirectory("graft_empty").toString
+    Files.write(Paths.get(empty, "_SUCCESS"), Array.emptyByteArray)
+    Seq(missing, empty).foreach { path =>
+      val ours = intercept[Exception](Tables.parquet(spark, path))
+      val theirs = intercept[Exception](spark.read.parquet(path))
+      assert(ours.getClass === theirs.getClass, path)
+      def condition(e: Exception) = e match {
+        case t: SparkThrowable => Option(t.getCondition)
+        case _ => None
+      }
+      assert(condition(ours) === condition(theirs), path)
+      assert(condition(ours).isDefined, s"$path: ${ours.getMessage}")
+    }
+  }
+
+  test("Tables.parquet reads the footer inference reads: summaries first, Spark's path on a partition key") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_summary").toString
+    val dir = s"$base/t"
+    Seq((1L, 10.0)).toDF("id", "value").coalesce(1).write.parquet(dir)
+    // summary files with schemas no data file has: _common_metadata's
+    // wins over _metadata's and the data file's
+    Seq((2L, 20.0, "x")).toDF("id", "value", "common").coalesce(1).write.parquet(s"$base/c")
+    Seq((3L, 30.0, 0.5)).toDF("id", "value", "meta").coalesce(1).write.parquet(s"$base/m")
+    Files.copy(partFile(s"$base/c"), Paths.get(dir, "_common_metadata"),
+      StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(partFile(s"$base/m"), Paths.get(dir, "_metadata"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val df = Tables.parquet(spark, dir)
+    assert(df.columns.toSeq === Seq("id", "value", "common"))
+    sameAsSpark(dir, df)
+    // a footer that also names the partition key (not a Spark-written
+    // layout): Spark resolves the overlap itself, so the helper defers
+    val overlap = s"$base/overlap"
+    Seq(("7", 1L)).toDF("k", "id").write.parquet(s"$overlap/k=7")
+    sameAsSpark(overlap, Tables.parquet(spark, overlap))
   }
 }

@@ -292,4 +292,30 @@ class PlanGuardSpec extends SparkSpec {
         s"$name: no BroadcastHashJoin in plan:\n$plan")
     }
   }
+
+  test("src/main opens parquet only through Tables.parquet") {
+    // The read-path guard, same spirit as the plan guards: an inferring
+    // `spark.read.parquet` costs a whole Spark job per open (the footer
+    // read), so every parquet open in the library goes through
+    // Tables.parquet, whose Spark fallback is the one allowed call.
+    // tools/ mains are not library code.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: no $root")
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*")) "" else line.split("//", 2)(0)
+    }
+    val calls = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("tools")))
+      .toSeq.flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if code(line).contains(".read.parquet(") =>
+            s"${root.relativize(p)}:${i + 1}"
+        }
+      }
+    val (helper, others) = calls.partition(_.startsWith("sources/Tables.scala:"))
+    assert(others.isEmpty, s"parquet opened outside Tables.parquet: ${others.mkString(", ")}")
+    assert(helper.size === 1, s"Tables.scala should call spark.read.parquet once: $helper")
+  }
 }
