@@ -3,66 +3,6 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
 
-  /** One bench session. Beyond the query-plan configs (shuffle
-    * partitions = cores, partition-discovery threshold), the session
-    * carries the anti-interference settings motivated by nine rounds
-    * of full-run-vs-isolated drift (round-9 audit: five keys inflated
-    * 2-6× in situ with ≤1.3 isolated noise — accumulated session
-    * state, not host contention):
-    *
-    *  - `spark.cleaner.periodicGC.interval=1min`: shuffle files and
-    *    broadcast blocks are only deleted when the DRIVER GCs the
-    *    referencing objects; with a 128 GiB heap a full run's ~1300
-    *    executions accumulate gigabytes of dead shuffle files that
-    *    evict the parquet page cache. A 1-minute periodic GC keeps the
-    *    cleaner draining continuously instead of in one late burst.
-    *  - retained jobs/stages/tasks/executions cut to a few hundred:
-    *    the AppStatusStore trims asynchronously ON THE LISTENER BUS —
-    *    with defaults (1000 jobs / 1000 stages / 100k tasks) the trim
-    *    work grows with run length and lands in whichever query is
-    *    executing when the threshold trips. Small bounds make the
-    *    trim cost constant and negligible.
-    *  - `spark.sql.codegen.cache.maxEntries=2000` (default 100): a
-    *    282-query surface compiles far more than 100 codegen classes,
-    *    so with the default every query evicts its predecessors and
-    *    Janino recompiles on each revisit (the isolated-rerun phase,
-    *    spec suites). 2000 holds the whole surface.
-    */
-  private def mkSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local mode: driver-side listing of a few hundred partition
-      // dirs is microseconds; the default threshold (32) launches a
-      // distributed file-listing JOB per partitioned-table read, a
-      // fixed ~0.3 s tax that dwarfs the actual probe on persisted
-      // index tables (cluster deployments want the default back)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // If events.parquet ships the historical TIMESTAMP(NANOS) encoding,
-      // surface it as a nanos long (graft.sources.Tables.events dispatches
-      // on the actual type; this conf is a no-op for micros columns).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 30min, NOT 1min: the cleaner only drains on driver GC, but a
-      // 1-minute periodic FULL GC fires ~20 times across a 20-minute
-      // timed pass and lands inside whichever rep is running — the
-      // r12/r13 "roving inflation" signature (2-4x on a different key
-      // set each round, every one clean when re-run isolated). The
-      // steady drain now comes from the explicit untimed System.gc()
-      // every 4 keys in the timed loop; this interval is only the
-      // backstop for pathological single-key stretches.
-      .config("spark.cleaner.periodicGC.interval", "30min")
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** warm-ups + timed reps for one query; returns (median, min, noise, err). */
   private def timeOne(spark: SparkSession, sfDir: String,
                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -114,7 +54,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    var spark = mkSession(cpus)
+    var spark = GraftSession.local(cpus)
     // optional arg: comma-separated subset of query names (targeted
     // perf iteration; the driver runs the full surface with no args)
     val subset: Set[String] =
@@ -139,32 +79,22 @@ object Bench {
     }
     // PRE-BUILD phase (round-10 interference bisect): every persisted
     // artifact — bar tables, band/cluster/containment/BM25 indexes,
-    // partials, co-bucketed facts — is built ONCE here, at the target
-    // SF, before any timed rep. Previously each build landed inside
-    // its *_indexed key's warm-ups at that key's alphabetical slot,
-    // and the catalog-table writes left session/warehouse state whose
-    // deferred costs (cleaner drains, file-system flushes, page-cache
-    // eviction) hit whichever keys ran NEXT — the r9/r10 full-run
-    // inflation on the r/s stretch (rsi_wilder 4.75 s in situ vs
-    // 0.60 isolated) sat right after the rollup_/rsi_ index builds.
-    // Builds are ingest-time work; no query should ever pay them.
-    // The *_incremental keys build corpus-minus-batch indexes (catalog
-    // table writes) on first touch, exactly like the *_indexed family —
-    // include them, or their builds land inside their own warm-ups
-    // mid-run and tax whichever keys run next (the round-11 advice).
-    val artifactKeys = SparkEntry.queries.keys
-      .filter(k => (k.contains("indexed") || k.contains("incremental") ||
-        k.contains("upsert") || k.contains("stream_ingested") ||
-        k.contains("drift") || k.contains("twolevel") ||
-        k.contains("retrained") || k == "split_from_index") &&
-        // the ivf_assign_* measurement pair is pure in-query (no
-        // artifact to pre-build); pre-running one side would also give
-        // the two timing-comparison keys asymmetric warm treatment
-        !k.startsWith("ivf_assign")).toSeq.sorted
-    artifactKeys.foreach { k =>
+    // partials, co-bucketed facts, tmpdir IVF indexes, stream-grown
+    // tables — is built ONCE here, at the target SF, before any timed
+    // rep. Previously each build landed inside its key's warm-ups at
+    // that key's alphabetical slot, and the catalog-table writes left
+    // session/warehouse state whose deferred costs (cleaner drains,
+    // file-system flushes, page-cache eviction) hit whichever keys ran
+    // NEXT — the r9/r10 full-run inflation on the r/s stretch
+    // (rsi_wilder 4.75 s in situ vs 0.60 isolated) sat right after the
+    // rollup_/rsi_ index builds. Builds are ingest-time work; no query
+    // should ever pay them. A key's function runs its artifact builders
+    // eagerly while it builds the DataFrame (SparkEntry's two guards),
+    // so building every key's DataFrame with no action pre-builds
+    // exactly the keys that have artifacts, and every key alike.
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (k, fn) =>
       if (subset.isEmpty || subset(k))
-        try SparkEntry.queries(k)(spark, sfDir).count()
-        catch { case _: Throwable => () }
+        try fn(spark, sfDir) catch { case _: Throwable => () }
     }
     System.gc()
     // a failed query must be visible in the output, not benched as
@@ -246,7 +176,7 @@ object Bench {
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
         System.gc()
-        spark = mkSession(cpus)
+        spark = GraftSession.local(cpus)
         val byName = SparkEntry.queries
         // Per-suspect warm THEN time, interleaved — not all-warm-then-
         // all-time: with up to 24 suspects, the other 23 keys' target-sf

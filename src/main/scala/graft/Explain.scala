@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     for (name <- args) {
       println(s"===== $name =====")

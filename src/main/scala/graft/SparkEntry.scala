@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import graft.streaming.StreamingRollups
 import graft.sources.Tables
 import graft.operators._
 import graft.functions.TextAnalysis
@@ -26,12 +28,11 @@ object SparkEntry {
     Rollups.series(Tables.orders(s, d), "o_custkey", "o_orderdate", "o_totalprice")
 
   // ---- persisted-index gate plumbing -------------------------------
-  // The index artifacts are built ONCE per (session, sf dir) — the
-  // "computed at ingest" half of the index lifecycle — and the gate
-  // queries exercise the probe/consumer side. That way the gate
+  // The index artifacts are built ONCE per (session or JVM, sf dir) —
+  // the "computed at ingest" half of the index lifecycle — and the
+  // gate queries exercise the probe/consumer side. That way the gate
   // value-checks the at-scale shape (index reuse, not rebuild), and
-  // the bench's median-of-3 times the PROBE: only the first rep pays
-  // the build.
+  // the bench (which pre-builds every key) times the PROBE.
   // lowercased because Spark lowercases managed-table directory names;
   // a mixed-case tag would make ensureTable's stale-location cleanup
   // look for a directory that never exists on a case-sensitive FS.
@@ -52,6 +53,11 @@ object SparkEntry {
     (d.replaceAll("[^A-Za-z0-9]", "_") + "_" + fp).toLowerCase
   }
 
+  // Every gate artifact is built through one of two guards, each with
+  // its own memo scope: [[ensureTable]] (the session catalog) for the
+  // artifacts that die with their session, [[ensureDir]] (a JVM memo)
+  // for the tmpdir indexes. Stream-grown artifacts run their arriving
+  // batch through [[streamOnce]] inside either guard.
   private val indexLock = new Object
 
   /** Recursive delete (no-op on a missing path) — shared by every gate
@@ -63,6 +69,20 @@ object SparkEntry {
     ()
   }
 
+  private def warehouseDir(s: SparkSession): String =
+    s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+
+  /** Drop tables a previous JVM may have left, with their directories:
+    * the warehouse directory survives while the in-memory catalog does
+    * not, so DROP TABLE alone is a no-op and the next CREATE hits
+    * LOCATION_ALREADY_EXISTS.
+    */
+  private def dropTableAndDir(s: SparkSession, names: String*): Unit =
+    names.foreach { n =>
+      s.sql(s"DROP TABLE IF EXISTS $n")
+      rmTree(new java.io.File(warehouseDir(s), n))
+    }
+
   /** Maintenance side artifacts a KILLED previous run can leave for a
     * gate table — staging tables, commit markers, swap leftovers, the
     * writer lease. Builders clear them before building (a leftover
@@ -71,39 +91,39 @@ object SparkEntry {
     * survive after (a stray `_compact_tmp`/`_staging` surviving a gate
     * build would mask the crash-window specs).
     */
+  private def sideTables(name: String): Seq[String] =
+    Seq("_staged_append", "_compact_tmp", "_compact_old").map(name + _)
+
+  /** The side artifacts that are bare directories, never tables. */
+  private def sideDirs(name: String): Seq[String] =
+    Seq("_staged_commit", "_staged_commit.tmp", "_upsert_staging",
+      "_upsert_staging.tmp", "_writer_lease").map(name + _)
+
   private def strayArtifacts(s: SparkSession, name: String): Seq[String] = {
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val tables = Seq(s"${name}_staged_append", s"${name}_compact_tmp",
-      s"${name}_compact_old").filter(s.catalog.tableExists)
-    val dirs = Seq(s"${name}_staged_commit", s"${name}_staged_commit.tmp",
-      s"${name}_upsert_staging", s"${name}_upsert_staging.tmp",
-      s"${name}_writer_lease", s"${name}_staged_append", s"${name}_compact_tmp",
-      s"${name}_compact_old")
-      .filter(n => new java.io.File(wh, n).exists())
+    val tables = sideTables(name).filter(s.catalog.tableExists)
+    val dirs = (sideDirs(name) ++ sideTables(name))
+      .filter(n => new java.io.File(warehouseDir(s), n).exists())
     (tables ++ dirs).distinct
   }
 
   private def resetTableArtifacts(s: SparkSession, name: String): Unit = {
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(s"${name}_staged_append", s"${name}_compact_tmp", s"${name}_compact_old")
-      .foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
-    Seq(s"${name}_staged_append", s"${name}_compact_tmp", s"${name}_compact_old",
-      s"${name}_staged_commit", s"${name}_staged_commit.tmp",
-      s"${name}_upsert_staging", s"${name}_upsert_staging.tmp",
-      s"${name}_writer_lease")
-      .foreach { n =>
-        val f = new java.io.File(wh, n)
-        if (f.exists()) rmTree(f)
-      }
+    dropTableAndDir(s, sideTables(name): _*)
+    sideDirs(name).foreach(n => rmTree(new java.io.File(warehouseDir(s), n)))
   }
 
+  /** Guard (1): build a SESSION-scoped artifact — a managed table, a
+    * memory-sink stream view, a curation table — once per session; the
+    * session catalog is the memo.
+    */
+  // The session catalog, not a per-JVM memo: these artifacts die with
+  // the session, and the bench's isolated phase re-runs suspects in a
+  // FRESH session — a JVM-wide memo made every such re-run fail
+  // TABLE_OR_VIEW_NOT_FOUND (the r16 session_stream isolated_error).
   private def ensureTable(s: SparkSession, name: String)(build: => Unit): String =
     indexLock.synchronized {
       if (!s.catalog.tableExists(name)) {
         // a stale managed-table location (killed run) blocks CREATE
-        val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        val dir = new java.io.File(wh, name)
-        if (dir.exists()) rmTree(dir)
+        rmTree(new java.io.File(warehouseDir(s), name))
         resetTableArtifacts(s, name)
         build
         val strays = strayArtifacts(s, name)
@@ -112,6 +132,33 @@ object SparkEntry {
             strays.mkString(", "))
       }
       name
+    }
+
+  private def tmpDir(name: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"), name).toString
+
+  /** Guard (2): build a tmpdir index (`java.io.tmpdir/name`) once per
+    * JVM, handing `build` its path. The directory is cleared before
+    * every build: the index writers overwrite only the subdirectories
+    * they write, so a killed JVM's others (tombstones,
+    * `applied_batches`, …) would otherwise survive into the fresh
+    * index — a stale (streamId, 0) mark silently no-ops a stream
+    * append. Only a build that returns is memoized.
+    */
+  // built-once tracking is PER JVM (like the catalog check the table
+  // indexes use): a bare _SUCCESS probe would reuse a stale tmpdir
+  // index across sessions after the fixtures (or the index writer's
+  // defaults) changed, silently probing old vectors
+  private val builtDirs = scala.collection.mutable.Set.empty[String]
+  private def ensureDir(name: String)(build: String => Unit): String =
+    indexLock.synchronized {
+      val path = tmpDir(name)
+      if (!builtDirs(path)) {
+        rmTree(new java.io.File(path))
+        build(path)
+        builtDirs += path
+      }
+      path
     }
 
   private def minhashIdx(s: SparkSession, d: String): String = {
@@ -243,10 +290,6 @@ object SparkEntry {
        |FROM o ORDER BY doc_id""".stripMargin
   }
 
-  // built-once tracking is PER JVM (like the catalog check the table
-  // indexes use): a bare _SUCCESS probe would reuse a stale tmpdir
-  // index across sessions after the fixtures (or the index writer's
-  // defaults) changed, silently probing old vectors
   /** Deterministic status table for the lifecycle gates: every third
     * document "loaded", the next third "transformed", the rest absent
     * (implicitly "new") — a pure function of doc_id so the DuckDB
@@ -257,8 +300,6 @@ object SparkEntry {
         when(col("doc_id") % 3 === 0, lit("loaded"))
           .when(col("doc_id") % 3 === 1, lit("transformed")).as("status"))
       .filter(col("status").isNotNull)
-
-  private val ivfBuilt = scala.collection.mutable.Set.empty[String]
 
   // catalog table like every other persisted index twin: the catalog
   // owns the partition inventory, so probes skip the per-query
@@ -374,6 +415,18 @@ object SparkEntry {
       Tables.documents(s, d).filter(col("doc_id") % 13 =!= 0), t))
   }
 
+  /** Clear an upsert gate's `_stale_clusters` side table left by a
+    * previous JVM ([[dropTableAndDir]]). Called inside an
+    * [[ensureTable]] build, which has already reset the table's other
+    * maintenance side artifacts.
+    */
+  private def clearStaleSide(s: SparkSession, t: String): Unit = {
+    dropTableAndDir(s, Dedup.staleClusterTable(t))
+    // a previous JVM's crashed upsert may have left a committed staging
+    // dir — folding it into a freshly rebuilt table would be corruption
+    Dedup.clearUpsertStaging(s, t)
+  }
+
   /** Cluster index for the UPSERT gate: built over the corpus residue,
     * then the batch twins MERGED IN PLACE via
     * [[Dedup.upsertClusterIndex]] — the batch-sized persist path
@@ -382,24 +435,6 @@ object SparkEntry {
     * guard, so the table always carries the post-upsert state the
     * gate's stats read.
     */
-  /** Clear an upsert gate's `_stale_clusters` side table left by a
-    * previous JVM: the warehouse directory survives while the
-    * in-memory catalog does not, so DROP TABLE alone is a no-op and
-    * the upsert's CREATE hits LOCATION_ALREADY_EXISTS.
-    */
-  private def clearStaleSide(s: SparkSession, t: String): Unit = {
-    val stale = Dedup.staleClusterTable(t)
-    s.sql(s"DROP TABLE IF EXISTS $stale")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val dir = new java.io.File(wh, stale)
-    if (dir.exists()) rmTree(dir)
-    // a previous JVM's crashed upsert may have left a committed staging
-    // dir — folding it into a freshly rebuilt table would be corruption;
-    // ditto staged appends, swap leftovers, and the writer lease
-    Dedup.clearUpsertStaging(s, t)
-    resetTableArtifacts(s, t)
-  }
-
   private def clusterUpsertIndexTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_cluster_upsert_${tag(d)}"
     ensureTable(s, t) {
@@ -439,7 +474,7 @@ object SparkEntry {
     */
   private def feedStream[T](
       in: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T],
-      ds: org.apache.spark.sql.Dataset[T], chunk: Int = 65536): Unit = {
+      ds: Dataset[T], chunk: Int = 65536): Unit = {
     val it = ds.toLocalIterator()
     val buf = new scala.collection.mutable.ArrayBuffer[T](chunk)
     while (it.hasNext) {
@@ -449,63 +484,69 @@ object SparkEntry {
     if (buf.nonEmpty) in.addData(buf.toSeq: _*)
   }
 
-  private def ivfIdx(s: SparkSession, d: String): String = indexLock.synchronized {
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_gate_ivf_${tag(d)}").toString
-    if (!ivfBuilt.contains(path)) {
-      Similarity.writeIvfIndex(Tables.embeddings(s, d), path)
-      ivfBuilt += path
-    }
-    path
+  /** Run the arriving `batch` through a streaming stage as ONE
+    * micro-batch: feed it into a MemoryStream ([[feedStream]]), hand
+    * `start` the stream and a fresh checkpoint dir, then run the writer
+    * it returns under Trigger.Once. A timed-out build must fail fast
+    * (naming the artifact), NOT let its guard memoize a half-built
+    * artifact that every dependent gate then diffs against.
+    */
+  private def streamOnce[T](s: SparkSession, name: String, batch: Dataset[T])(
+      start: (Dataset[T], String) => DataStreamWriter[_]): Unit = {
+    implicit val enc: org.apache.spark.sql.Encoder[T] = batch.encoder
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
+    feedStream(in, batch)
+    val ck = java.nio.file.Files.createTempDirectory("graft_gate_ck").toString
+    val q = start(in.toDS(), ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+    require(q.awaitTermination(120000), s"stream gate build timed out: $name")
   }
 
-  /** AGED IVF index for the incremental gate: trained on the
-    * corpus-minus-batch residue, then the batch APPENDED under the
-    * aged codebook ([[Similarity.appendToIvfIndex]]) — the index state
-    * a recurring ingest pipeline actually probes. The build overwrites
-    * any previous generation's directory, so the append never
-    * double-lands across JVMs.
+  /** The arriving vector batch (vec_id ≡ 0 mod 13) of the incremental
+    * vector gates, typed for [[streamOnce]].
     */
+  private def vecBatch(s: SparkSession, d: String): Dataset[(Long, Array[Float])] = {
+    import s.implicits._
+    Tables.embeddings(s, d).filter(col("vec_id") % 13 === 0)
+      .select("vec_id", "embedding").as[(Long, Array[Float])]
+  }
+
+  /** The arriving text batch (doc_id ≡ 0 mod 13) of `docs` — the
+    * arriving-documents side of the text stream gates.
+    */
+  private def docBatch(s: SparkSession, docs: DataFrame): Dataset[(Long, String)] = {
+    import s.implicits._
+    docs.filter(col("doc_id") % 13 === 0).select("doc_id", "text").as[(Long, String)]
+  }
+
+  private def ivfIdx(s: SparkSession, d: String): String =
+    ensureDir(s"graft_gate_ivf_${tag(d)}")(
+      Similarity.writeIvfIndex(Tables.embeddings(s, d), _))
+
   /** STREAM-INGESTED IVF index: the residue-trained index grown by the
     * arriving vector batch through the PATH-BASED streaming stage
     * ([[graft.streaming.StreamingRollups.ivfAppendStream]] —
     * foreachBatch → appendToIvfIndex under `applied_batches`-dir
     * idempotence). The exact-guarantee probe stays exact over the
     * stream-grown lists (radii over live rows), so it shares
-    * `ann_ivf_incremental`'s brute-force-over-the-union oracle. The
-    * leftover `applied_batches` dir from a previous JVM is cleared
-    * before the rebuild — a stale (streamId, 0) mark would silently
-    * no-op the append and drop the batch from the index.
+    * `ann_ivf_incremental`'s brute-force-over-the-union oracle.
+    * [[ensureDir]] clears a previous JVM's `applied_batches` dir before
+    * the rebuild — a stale (streamId, 0) mark would silently no-op the
+    * append and drop the batch from the index.
     */
-  private val ivfStreamBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfStreamIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf_stream_${tag(d)}").toString
-      if (!ivfStreamBuilt.contains(path)) {
-        rmTree(new java.io.File(path))
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeIvfIndex(vecs.filter(col("vec_id") % 13 =!= 0), path)
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Array[Float], Int)]
-        feedStream(in, vecs.filter(col("vec_id") % 13 === 0)
+    ensureDir(s"graft_gate_ivf_stream_${tag(d)}") { path =>
+      import s.implicits._
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeIvfIndex(vecs.filter(col("vec_id") % 13 =!= 0), path)
+      streamOnce(s, path, vecs.filter(col("vec_id") % 13 === 0)
           .select("vec_id", "embedding", "label")
-          .as[(Long, Array[Float], Int)])
-        val ck = java.nio.file.Files
-          .createTempDirectory("g_gate_ivf_stream_ck").toString
-        val q = graft.streaming.StreamingRollups.ivfAppendStream(
-          in.toDF().toDF("vec_id", "embedding", "label"), path, ck,
+          .as[(Long, Array[Float], Int)]) { (in, ck) =>
+        StreamingRollups.ivfAppendStream(
+          in.toDF("vec_id", "embedding", "label"), path, ck,
           streamId = Some("gate-ivf-stream"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        // a timed-out build must fail fast, NOT memoize a half-built
-        // index that every dependent gate then diffs against
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $path")
-        ivfStreamBuilt += path
       }
-      path
     }
 
   /** Persisted SEMANTIC assignment (IVF layout under the SQL-replayable
@@ -513,32 +554,18 @@ object SparkEntry {
     * `semdedup_indexed` — and, in residue form ([[semIncrIdx]]),
     * behind the incremental admission gate.
     */
-  private val semIvfBuilt = scala.collection.mutable.Set.empty[String]
   private def semIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_sem_ivf_${tag(d)}").toString
-      if (!semIvfBuilt.contains(path)) {
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeIvfIndexWith(vecs, path,
-          Similarity.headCodebookSized(vecs))
-        semIvfBuilt += path
-      }
-      path
+    ensureDir(s"graft_gate_sem_ivf_${tag(d)}") { path =>
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeIvfIndexWith(vecs, path,
+        Similarity.headCodebookSized(vecs))
     }
 
-  private val semIncrBuilt = scala.collection.mutable.Set.empty[String]
   private def semIncrIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_sem_incr_${tag(d)}").toString
-      if (!semIncrBuilt.contains(path)) {
-        val residue = Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0)
-        Similarity.writeIvfIndexWith(residue, path,
-          Similarity.headCodebookSized(residue))
-        semIncrBuilt += path
-      }
-      path
+    ensureDir(s"graft_gate_sem_incr_${tag(d)}") { path =>
+      val residue = Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0)
+      Similarity.writeIvfIndexWith(residue, path,
+        Similarity.headCodebookSized(residue))
     }
 
   /** Persisted SEMANTIC COMPONENTS assignment (the cluster-index
@@ -561,40 +588,37 @@ object SparkEntry {
     * persist path (stale-mark superseded components + bucket-preserving
     * re-append), never a corpus rebuild. Edge generation reads the
     * residue IVF index ([[semIncrIdx]] — the same stored codebook the
-    * oracle replays). Both steps run under one ensureTable guard.
+    * oracle replays). Both steps run under the caller's ensureTable
+    * guard.
     */
+  private def semUpsertInto(s: SparkSession, d: String, t: String): Unit = {
+    clearStaleSide(s, t)
+    val vecs = Tables.embeddings(s, d)
+    val residue = vecs.filter(col("vec_id") % 13 =!= 0)
+    Similarity.writeSemanticClusterIndex(residue,
+      Similarity.headCodebookSized(residue), t)
+    Similarity.upsertSemanticClusterIndex(s, semIncrIdx(s, d), t,
+      vecs.filter(col("vec_id") % 13 === 0))
+  }
+
   private def semClusterUpsertTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_sem_upsert_${tag(d)}"
-    ensureTable(s, t) {
-      clearStaleSide(s, t)
-      val vecs = Tables.embeddings(s, d)
-      val residue = vecs.filter(col("vec_id") % 13 =!= 0)
-      Similarity.writeSemanticClusterIndex(residue,
-        Similarity.headCodebookSized(residue), t)
-      Similarity.upsertSemanticClusterIndex(s, semIncrIdx(s, d), t,
-        vecs.filter(col("vec_id") % 13 === 0))
-    }
+    ensureTable(s, t)(semUpsertInto(s, d, t))
   }
 
   /** The cluster-index COMPACTION gate's artifact: the semantic upsert
-    * table rebuilt independently ([[semClusterUpsertTable]]'s flow on
-    * its own name), then [[Dedup.compactClusterIndex]] folds BOTH side
-    * tables (doc tombstones absent here; the upsert's stale cluster
-    * ids present and non-empty, asserted) into fresh bucketed files.
-    * Live rows must be IDENTICAL before and after, so the key shares
-    * the upsert gate's full-rebuild oracle — probe-after-compact ≡
-    * probe-before, the third compact mechanism oracle-gated.
+    * table rebuilt independently ([[semUpsertInto]] on its own name),
+    * then [[Dedup.compactClusterIndex]] folds BOTH side tables (doc
+    * tombstones absent here; the upsert's stale cluster ids present
+    * and non-empty, asserted) into fresh bucketed files. Live rows
+    * must be IDENTICAL before and after, so the key shares the upsert
+    * gate's full-rebuild oracle — probe-after-compact ≡ probe-before,
+    * the third compact mechanism oracle-gated.
     */
   private def semClusterUpsertCompactTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_sem_upsc_${tag(d)}"
     ensureTable(s, t) {
-      clearStaleSide(s, t)
-      val vecs = Tables.embeddings(s, d)
-      val residue = vecs.filter(col("vec_id") % 13 =!= 0)
-      Similarity.writeSemanticClusterIndex(residue,
-        Similarity.headCodebookSized(residue), t)
-      Similarity.upsertSemanticClusterIndex(s, semIncrIdx(s, d), t,
-        vecs.filter(col("vec_id") % 13 === 0))
+      semUpsertInto(s, d, t)
       require(s.catalog.tableExists(Dedup.staleClusterTable(t)),
         "cluster compaction gate: the upsert superseded nothing — " +
           "the stale-fold path would be vacuous")
@@ -616,35 +640,16 @@ object SparkEntry {
     * The gate probes per-list live counts ([[Similarity.ivfListSizes]]);
     * the oracle recomputes the admission rule and the counts in SQL.
     */
-  private val semAdmitBuilt = scala.collection.mutable.Set.empty[String]
   private def semAdmitIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_sem_admit_${tag(d)}").toString
-      if (!semAdmitBuilt.contains(path)) {
-        rmTree(new java.io.File(path))
-        val vecs = Tables.embeddings(s, d)
-        val residue = vecs.filter(col("vec_id") % 13 =!= 0)
-        Similarity.writeIvfIndexWith(residue, path,
-          Similarity.headCodebookSized(residue))
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Array[Float])]
-        feedStream(in, vecs.filter(col("vec_id") % 13 === 0)
-          .select("vec_id", "embedding")
-          .as[(Long, Array[Float])])
-        val ck = java.nio.file.Files
-          .createTempDirectory("g_gate_sem_admit_ck").toString
-        val q = graft.streaming.StreamingRollups.semanticAdmissionStream(
-          in.toDF().toDF("vec_id", "embedding"), path, ck,
+    ensureDir(s"graft_gate_sem_admit_${tag(d)}") { path =>
+      val residue = Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0)
+      Similarity.writeIvfIndexWith(residue, path,
+        Similarity.headCodebookSized(residue))
+      streamOnce(s, path, vecBatch(s, d)) { (in, ck) =>
+        StreamingRollups.semanticAdmissionStream(
+          in.toDF("vec_id", "embedding"), path, ck,
           streamId = Some("gate-sem-admit"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $path")
-        semAdmitBuilt += path
       }
-      path
     }
 
   /** Persisted TWO-LEVEL IVF index (coarse ⋈ fine codebook, flat
@@ -652,37 +657,22 @@ object SparkEntry {
     * n·k·d ceiling; probed by the SAME exact-guarantee machinery as
     * the flat index, so its oracle is plain brute force.
     */
-  private val ivf2Built = scala.collection.mutable.Set.empty[String]
   private def ivfTwoLevelIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf2_${tag(d)}").toString
-      if (!ivf2Built.contains(path)) {
-        Similarity.writeTwoLevelIvfIndex(Tables.embeddings(s, d), path)
-        ivf2Built += path
-      }
-      path
-    }
+    ensureDir(s"graft_gate_ivf2_${tag(d)}")(
+      Similarity.writeTwoLevelIvfIndex(Tables.embeddings(s, d), _))
 
   /** Residue-built two-level index grown by the batch through the
     * FACTORED append ([[Similarity.appendToTwoLevelIvfIndex]] — coarse
     * route, then the cell's ragged book, batch·2√k·d) — the two-level
     * family's check→extend loop.
     */
-  private val ivf2IncrBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfTwoLevelIncrIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf2_incr_${tag(d)}").toString
-      if (!ivf2IncrBuilt.contains(path)) {
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeTwoLevelIvfIndex(
-          vecs.filter(col("vec_id") % 13 =!= 0), path)
-        Similarity.appendToTwoLevelIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 13 === 0))
-        ivf2IncrBuilt += path
-      }
-      path
+    ensureDir(s"graft_gate_ivf2_incr_${tag(d)}") { path =>
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeTwoLevelIvfIndex(
+        vecs.filter(col("vec_id") % 13 =!= 0), path)
+      Similarity.appendToTwoLevelIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 13 === 0))
     }
 
   /** Two-level index drifted (factored batch append) → takedown →
@@ -691,152 +681,86 @@ object SparkEntry {
     * index must never retrain flat, or every future append silently
     * pays n·k·d again.
     */
-  private val ivf2RetrainBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfTwoLevelRetrainIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf2_retrain_${tag(d)}").toString
-      if (!ivf2RetrainBuilt.contains(path)) {
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeTwoLevelIvfIndex(
-          vecs.filter(col("vec_id") % 13 =!= 0), path)
-        Similarity.appendToTwoLevelIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 13 === 0))
-        Similarity.deleteFromIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
-        Similarity.retrainTwoLevelIvfIndex(s, path)
-        ivf2RetrainBuilt += path
-      }
-      path
+    ensureDir(s"graft_gate_ivf2_retrain_${tag(d)}") { path =>
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeTwoLevelIvfIndex(
+        vecs.filter(col("vec_id") % 13 =!= 0), path)
+      Similarity.appendToTwoLevelIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 13 === 0))
+      Similarity.deleteFromIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
+      Similarity.retrainTwoLevelIvfIndex(s, path)
     }
 
   /** STREAM-grown two-level index: residue built batch-side, the
     * arriving vector batch appended through the FACTORED streaming
     * stage ([[graft.streaming.StreamingRollups.ivfTwoLevelAppendStream]]).
     */
-  private val ivf2StreamBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfTwoLevelStreamIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf2_stream_${tag(d)}").toString
-      if (!ivf2StreamBuilt.contains(path)) {
-        rmTree(new java.io.File(path))
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeTwoLevelIvfIndex(
-          vecs.filter(col("vec_id") % 13 =!= 0), path)
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Array[Float])]
-        feedStream(in, vecs.filter(col("vec_id") % 13 === 0)
-          .select("vec_id", "embedding").as[(Long, Array[Float])])
-        val ck = java.nio.file.Files
-          .createTempDirectory("g_gate_ivf2_stream_ck").toString
-        val q = graft.streaming.StreamingRollups.ivfTwoLevelAppendStream(
-          in.toDF().toDF("vec_id", "embedding"), path, ck,
+    ensureDir(s"graft_gate_ivf2_stream_${tag(d)}") { path =>
+      Similarity.writeTwoLevelIvfIndex(
+        Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0), path)
+      streamOnce(s, path, vecBatch(s, d)) { (in, ck) =>
+        StreamingRollups.ivfTwoLevelAppendStream(
+          in.toDF("vec_id", "embedding"), path, ck,
           streamId = Some("gate-ivf2-stream"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $path")
-        ivf2StreamBuilt += path
       }
-      path
     }
 
-  /** The full CURATION loop gate artifacts: the residue semantic index
-    * + residue components table, ONE micro-batch run through
+  /** The CURATION loop gate artifacts: a residue semantic index at
+    * `java.io.tmpdir/graft_gate_<name>_<tag>` + a residue components
+    * table `g_gate_<name>_<tag>`, both written by `writeIndexes`
+    * (residue, index path, table), then ONE micro-batch run through
     * [[graft.streaming.StreamingRollups.semanticCurationStream]] —
     * admission check, index append of the novel vectors, component
     * merge of the admitted set — under one replay guard. Returns the
-    * components table name (the probe reads its live histogram); the
-    * IVF index path is derived.
+    * components table name (the probe reads its live histogram).
+    * Guarded on the session catalog: the components table dies with
+    * the session, so a fresh bench session (the isolated phase) must
+    * rebuild, not skip.
     */
-  // guarded on the session catalog (not a JVM memo): the components
-  // table is a catalog table that dies with the session, so a fresh
-  // bench session (the isolated phase) must rebuild, not skip
-  private def semCurationTables(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val t = s"g_gate_sem_curation_${tag(d)}"
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_sem_curation_${tag(d)}").toString
-      if (!s.catalog.tableExists(t)) {
-        rmTree(new java.io.File(path))
-        val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        // the components table, its stale side, AND the inner merge
-        // guard's applied-batch side table may all survive a previous
-        // JVM as warehouse dirs
-        Seq(t, graft.sources.IndexMaintenance.appliedBatchTable(t)).foreach { n =>
-          s.sql(s"DROP TABLE IF EXISTS $n")
-          val dir = new java.io.File(wh, n)
-          if (dir.exists()) rmTree(dir)
-        }
-        clearStaleSide(s, t)
-        val vecs = Tables.embeddings(s, d)
-        val residue = vecs.filter(col("vec_id") % 13 =!= 0)
-        val cents = Similarity.headCodebookSized(residue)
-        Similarity.writeIvfIndexWith(residue, path, cents)
-        Similarity.writeSemanticClusterIndex(residue, cents, t)
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Array[Float])]
-        feedStream(in, vecs.filter(col("vec_id") % 13 === 0)
-          .select("vec_id", "embedding").as[(Long, Array[Float])])
-        val ck = java.nio.file.Files
-          .createTempDirectory("g_gate_sem_curation_ck").toString
-        val q = graft.streaming.StreamingRollups.semanticCurationStream(
-          in.toDF().toDF("vec_id", "embedding"), path, t, ck,
-          streamId = Some("gate-sem-curation"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $t")
+  private def semCurationLoop(s: SparkSession, d: String, name: String)(
+      writeIndexes: (DataFrame, String, String) => Unit): String = {
+    val t = s"g_gate_${name}_${tag(d)}"
+    ensureTable(s, t) {
+      val path = tmpDir(s"graft_gate_${name}_${tag(d)}")
+      rmTree(new java.io.File(path))
+      // the stale side AND the inner merge guard's applied-batch side
+      // table may both survive a previous JVM as warehouse dirs
+      dropTableAndDir(s, graft.sources.IndexMaintenance.appliedBatchTable(t))
+      clearStaleSide(s, t)
+      writeIndexes(Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0), path, t)
+      streamOnce(s, t, vecBatch(s, d)) { (in, ck) =>
+        StreamingRollups.semanticCurationStream(
+          in.toDF("vec_id", "embedding"), path, t, ck,
+          streamId = Some(s"gate-${name.replace('_', '-')}"))
       }
-      t
+    }
+  }
+
+  /** The flat curation loop: residue index and components under the
+    * residue-sized head codebook.
+    */
+  private def semCurationTables(s: SparkSession, d: String): String =
+    semCurationLoop(s, d, "sem_curation") { (residue, path, t) =>
+      val cents = Similarity.headCodebookSized(residue)
+      Similarity.writeIvfIndexWith(residue, path, cents)
+      Similarity.writeSemanticClusterIndex(residue, cents, t)
     }
 
-  /** The FACTORED curation loop's gate artifacts: the same
-    * admit → append → merge stage ([[graft.streaming.StreamingRollups.semanticCurationStream]],
-    * no code change) pointed at a TWO-LEVEL residue index
+  /** The FACTORED curation loop: the same admit → append → merge stage
+    * (no code change) pointed at a TWO-LEVEL residue index
     * ([[Similarity.writeTwoLevelIvfIndexWith]] under the SQL-replayable
     * head books) + a residue components table built over the same
     * factored assignment — every batch pass in the loop routes
     * batch·2√k·d through [[Similarity.assignUnderIndex]].
     */
   private def semCurationTwoLevelTables(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val t = s"g_gate_sem_cur2_${tag(d)}"
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_sem_cur2_${tag(d)}").toString
-      if (!s.catalog.tableExists(t)) {
-        rmTree(new java.io.File(path))
-        val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        Seq(t, graft.sources.IndexMaintenance.appliedBatchTable(t)).foreach { n =>
-          s.sql(s"DROP TABLE IF EXISTS $n")
-          val dir = new java.io.File(wh, n)
-          if (dir.exists()) rmTree(dir)
-        }
-        clearStaleSide(s, t)
-        val vecs = Tables.embeddings(s, d)
-        val residue = vecs.filter(col("vec_id") % 13 =!= 0)
-        val books = Similarity.headTwoLevelBooks(residue)
-        Similarity.writeTwoLevelIvfIndexWith(residue, path, books)
-        Similarity.writeSemanticClusterIndexTwoLevel(residue, books, t)
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Array[Float])]
-        feedStream(in, vecs.filter(col("vec_id") % 13 === 0)
-          .select("vec_id", "embedding").as[(Long, Array[Float])])
-        val ck = java.nio.file.Files
-          .createTempDirectory("g_gate_sem_cur2_ck").toString
-        val q = graft.streaming.StreamingRollups.semanticCurationStream(
-          in.toDF().toDF("vec_id", "embedding"), path, t, ck,
-          streamId = Some("gate-sem-cur2"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $t")
-      }
-      t
+    semCurationLoop(s, d, "sem_cur2") { (residue, path, t) =>
+      val books = Similarity.headTwoLevelBooks(residue)
+      Similarity.writeTwoLevelIvfIndexWith(residue, path, books)
+      Similarity.writeSemanticClusterIndexTwoLevel(residue, books, t)
     }
 
   /** COMPACTED IVF index — the PATH-based compaction mechanism
@@ -849,37 +773,29 @@ object SparkEntry {
     * bounds hold over any live-row layout, so brute force over the
     * surviving vectors is the oracle.
     */
-  private val ivfCompactBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfCompactIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf_compact_${tag(d)}").toString
-      if (!ivfCompactBuilt.contains(path)) {
-        rmTree(new java.io.File(path))
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeIvfIndex(vecs, path)
-        Similarity.deleteFromIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
-        def files(sub: String): Set[String] = {
-          val dir = new java.io.File(path, sub)
-          Option(dir.listFiles()).map(_.flatMap { f =>
-            if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-              .filter(_.isFile).map(g => f.getName + "/" + g.getName)
-            else Array(f.getName)
-          }.toSet).getOrElse(Set.empty[String])
-        }
-        require(new java.io.File(path, "tombstones").exists(),
-          "IVF compaction gate: no tombstones to fold — gate would be vacuous")
-        val before = files("assigned")
-        Similarity.compactIvfIndex(s, path)
-        require(!new java.io.File(path, "tombstones").exists(),
-          "IVF compaction gate: tombstones dir survived the compact")
-        val after = files("assigned")
-        require(after.nonEmpty && after != before,
-          "IVF compaction gate: assigned files unchanged — compact did not rewrite")
-        ivfCompactBuilt += path
+    ensureDir(s"graft_gate_ivf_compact_${tag(d)}") { path =>
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeIvfIndex(vecs, path)
+      Similarity.deleteFromIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
+      def files(sub: String): Set[String] = {
+        val dir = new java.io.File(path, sub)
+        Option(dir.listFiles()).map(_.flatMap { f =>
+          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
+            .filter(_.isFile).map(g => f.getName + "/" + g.getName)
+          else Array(f.getName)
+        }.toSet).getOrElse(Set.empty[String])
       }
-      path
+      require(new java.io.File(path, "tombstones").exists(),
+        "IVF compaction gate: no tombstones to fold — gate would be vacuous")
+      val before = files("assigned")
+      Similarity.compactIvfIndex(s, path)
+      require(!new java.io.File(path, "tombstones").exists(),
+        "IVF compaction gate: tombstones dir survived the compact")
+      val after = files("assigned")
+      require(after.nonEmpty && after != before,
+        "IVF compaction gate: assigned files unchanged — compact did not rewrite")
     }
 
   /** TOMBSTONED-BUT-NOT-COMPACTED twin tables/dirs for the maintenance
@@ -897,32 +813,22 @@ object SparkEntry {
     }
   }
 
-  private val ivfMaintBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfMaintIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf_maint_${tag(d)}").toString
-      if (!ivfMaintBuilt.contains(path)) {
-        rmTree(new java.io.File(path))
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeIvfIndex(vecs, path)
-        Similarity.deleteFromIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
-        ivfMaintBuilt += path
-      }
-      path
+    ensureDir(s"graft_gate_ivf_maint_${tag(d)}") { path =>
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeIvfIndex(vecs, path)
+      Similarity.deleteFromIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
     }
 
   /** Data files of a managed table's warehouse dir (committed parquet
     * parts only) — the compaction gate's did-it-actually-rewrite
     * evidence. */
-  private def tableDataFiles(s: SparkSession, t: String): Set[String] = {
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Option(new java.io.File(wh, t).listFiles())
+  private def tableDataFiles(s: SparkSession, t: String): Set[String] =
+    Option(new java.io.File(warehouseDir(s), t).listFiles())
       .map(_.filter(f => f.isFile && !f.getName.startsWith("_") &&
         !f.getName.startsWith(".")).map(_.getName).toSet)
       .getOrElse(Set.empty[String])
-  }
 
   /** COMPACTED minhash index: build over the corpus, tombstone the
     * doc_id ≡ 3 (mod 97) takedown slice, then FOLD the tombstones into
@@ -935,19 +841,13 @@ object SparkEntry {
     */
   private def minhashCompactIdx(s: SparkSession, d: String): String = {
     val t = s"g_gate_minhash_compact_${tag(d)}"
+    val tomb = graft.sources.IndexMaintenance.tombstoneTable(t)
     ensureTable(s, t) {
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq(graft.sources.IndexMaintenance.tombstoneTable(t),
-          s"${t}_compact_tmp").foreach { n =>
-        s.sql(s"DROP TABLE IF EXISTS $n")
-        val dir = new java.io.File(wh, n)
-        if (dir.exists()) rmTree(dir)
-      }
+      dropTableAndDir(s, tomb)
       Dedup.writeMinhashIndex(Tables.documents(s, d), t)
       Dedup.deleteFromMinhashIndex(s, t,
         Tables.documents(s, d).filter(col("doc_id") % 97 === 3)
           .select("doc_id"))
-      val tomb = graft.sources.IndexMaintenance.tombstoneTable(t)
       require(s.catalog.tableExists(tomb),
         "compaction gate: no tombstones to fold — the gate would be vacuous")
       val before = tableDataFiles(s, t)
@@ -960,18 +860,37 @@ object SparkEntry {
     }
   }
 
-  private val ivfIncrBuilt = scala.collection.mutable.Set.empty[String]
-  private def ivfIncrIdx(s: SparkSession, d: String): String = indexLock.synchronized {
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_gate_ivf_incr_${tag(d)}").toString
-    if (!ivfIncrBuilt.contains(path)) {
+  /** AGED IVF index for the incremental gate: trained on the
+    * corpus-minus-batch residue, then the batch APPENDED under the
+    * aged codebook ([[Similarity.appendToIvfIndex]]) — the index state
+    * a recurring ingest pipeline actually probes. [[ensureDir]] clears
+    * any previous generation's directory first, so the append never
+    * double-lands across JVMs.
+    */
+  private def ivfIncrIdx(s: SparkSession, d: String): String =
+    ensureDir(s"graft_gate_ivf_incr_${tag(d)}") { path =>
       val vecs = Tables.embeddings(s, d)
       Similarity.writeIvfIndex(vecs.filter(col("vec_id") % 13 =!= 0), path)
       Similarity.appendToIvfIndex(s, path, vecs.filter(col("vec_id") % 13 === 0))
-      ivfIncrBuilt += path
     }
-    path
-  }
+
+  /** Shared plumbing for every STREAM-INGESTED index gate: clear the
+    * batch-id side table left by a previous JVM (warehouse dir
+    * survives, the in-memory catalog does not), build the residue
+    * index, then run the arriving `batch` as ONE micro-batch through
+    * the family's streaming append stage ([[streamOnce]]). The finished
+    * index must be indistinguishable (at probe level) from building
+    * over the whole corpus at once, so each gate probe shares its
+    * batch-built twin's oracle verbatim.
+    */
+  private def streamIngestTable[T](s: SparkSession, t: String, batch: => Dataset[T])(
+      buildResidue: => Unit)(
+      start: (Dataset[T], String) => DataStreamWriter[_]): String =
+    ensureTable(s, t) {
+      dropTableAndDir(s, graft.sources.IndexMaintenance.appliedBatchTable(t))
+      buildResidue
+      streamOnce(s, t, batch)(start)
+    }
 
   /** STREAM-INGESTED minhash index for the streaming-lifecycle gate:
     * the corpus residue built batch-side, then the arriving batch
@@ -983,51 +902,14 @@ object SparkEntry {
     * once, so the gate probe shares `dedup_minhash_lsh_indexed`'s
     * brute-force Jaccard oracle verbatim.
     */
-  /** Shared plumbing for every STREAM-INGESTED index gate: clear the
-    * batch-id side table left by a previous JVM (warehouse dir
-    * survives, the in-memory catalog does not), build the residue
-    * index, then run ONE MemoryStream micro-batch through the family's
-    * streaming append stage under Trigger.Once. The finished index
-    * must be indistinguishable (at probe level) from building over the
-    * whole corpus at once, so each gate probe shares its batch-built
-    * twin's oracle verbatim.
-    */
-  private def streamIngestTable(s: SparkSession, t: String)(
-      buildResidue: => Unit)(
-      startStream: String => org.apache.spark.sql.streaming.StreamingQuery): String =
-    ensureTable(s, t) {
-      val side = graft.sources.IndexMaintenance.appliedBatchTable(t)
-      s.sql(s"DROP TABLE IF EXISTS $side")
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      rmTree(new java.io.File(wh, side))
-      buildResidue
-      val ck = java.nio.file.Files.createTempDirectory(s"${t}_ck").toString
-      val q = startStream(ck)
-      require(q.awaitTermination(120000),
-        s"stream gate build timed out: $t")
-    }
-
-  /** One-micro-batch MemoryStream over the text batch split (doc_id ≡
-    * 0 mod 13) — the arriving-documents side of the text stream gates.
-    */
-  private def docBatchStream(s: SparkSession, d: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    feedStream(in, Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-      .select("doc_id", "text").as[(Long, String)])
-    in.toDF().toDF("doc_id", "text")
-  }
-
   private def lshStreamIdxTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_lsh_stream_${tag(d)}"
-    streamIngestTable(s, t) {
+    streamIngestTable(s, t, docBatch(s, Tables.documents(s, d))) {
       Dedup.writeMinhashIndex(
         Tables.documents(s, d).filter(col("doc_id") % 13 =!= 0), t)
-    } { ck =>
-      graft.streaming.StreamingRollups.indexAppendStream(
-        docBatchStream(s, d), t, ck, streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+    } { (in, ck) =>
+      StreamingRollups.indexAppendStream(
+        in.toDF("doc_id", "text"), t, ck, streamId = Some(t))
     }
   }
 
@@ -1041,13 +923,12 @@ object SparkEntry {
     */
   private def containStreamIdxTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_contain_stream_${tag(d)}"
-    streamIngestTable(s, t) {
+    streamIngestTable(s, t, docBatch(s, Tables.documents(s, d))) {
       Dedup.writeContainmentIndex(
         Tables.documents(s, d).filter(col("doc_id") % 13 =!= 0), t)
-    } { ck =>
-      graft.streaming.StreamingRollups.containmentAppendStream(
-        docBatchStream(s, d), t, ck, streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+    } { (in, ck) =>
+      StreamingRollups.containmentAppendStream(
+        in.toDF("doc_id", "text"), t, ck, streamId = Some(t))
     }
   }
 
@@ -1061,13 +942,12 @@ object SparkEntry {
     */
   private def bm25StreamIdxTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_bm25_stream_${tag(d)}"
-    streamIngestTable(s, t) {
+    streamIngestTable(s, t, docBatch(s, Tables.documents(s, d))) {
       Corpus.writeBm25Index(
         Tables.documents(s, d).filter(col("doc_id") % 13 =!= 0), t)
-    } { ck =>
-      graft.streaming.StreamingRollups.bm25AppendStream(
-        docBatchStream(s, d), t, ck, streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+    } { (in, ck) =>
+      StreamingRollups.bm25AppendStream(
+        in.toDF("doc_id", "text"), t, ck, streamId = Some(t))
     }
   }
 
@@ -1082,20 +962,12 @@ object SparkEntry {
     */
   private def embedStreamIdxTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_embed_stream_${tag(d)}"
-    streamIngestTable(s, t) {
+    streamIngestTable(s, t, vecBatch(s, d)) {
       Dedup.writeEmbedBandIndex(
         Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0), t)
-    } { ck =>
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      feedStream(in, Tables.embeddings(s, d).filter(col("vec_id") % 13 === 0)
-        .select("vec_id", "embedding")
-        .as[(Long, Array[Float])])
-      graft.streaming.StreamingRollups.embedAppendStream(
-        in.toDF().toDF("vec_id", "embedding"), t, ck, streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+    } { (in, ck) =>
+      StreamingRollups.embedAppendStream(
+        in.toDF("vec_id", "embedding"), t, ck, streamId = Some(t))
     }
   }
 
@@ -1107,24 +979,19 @@ object SparkEntry {
     * the probe shares `media_phash_indexed`'s oracle verbatim.
     */
   private def mediaStreamIdxTable(s: SparkSession, d: String): String = {
+    import s.implicits._
     val t = s"g_gate_media_stream_${tag(d)}"
-    streamIngestTable(s, t) {
-      Multimodal.writeMediaPhashIndex(
-        Multimodal.gateMedia(Tables.documents(s, d))
-          .filter(col("media_id") % 13 =!= 0), t)
-    } { ck =>
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Array[Byte], Map[String, String])]
-      feedStream(in, Multimodal.gateMedia(Tables.documents(s, d))
-        .filter(col("media_id") % 13 === 0)
+    // lazy: opened only when the guard builds, not on every probe
+    lazy val media = Multimodal.gateMedia(Tables.documents(s, d))
+    streamIngestTable(s, t, media.filter(col("media_id") % 13 === 0)
         .select("media_id", "modality", "payload", "meta")
-        .as[(Long, String, Array[Byte], Map[String, String])])
-      graft.streaming.StreamingRollups.mediaAppendStream(
-        in.toDF().toDF("media_id", "modality", "payload", "meta"), t, ck,
+        .as[(Long, String, Array[Byte], Map[String, String])]) {
+      Multimodal.writeMediaPhashIndex(
+        media.filter(col("media_id") % 13 =!= 0), t)
+    } { (in, ck) =>
+      StreamingRollups.mediaAppendStream(
+        in.toDF("media_id", "modality", "payload", "meta"), t, ck,
         streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
     }
   }
 
@@ -1139,22 +1006,15 @@ object SparkEntry {
     */
   private def clusterUpsertStreamTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_cluster_ups_stream_${tag(d)}"
-    streamIngestTable(s, t) {
+    // lazy: opened only when the guard builds, not on every probe
+    lazy val docs = incrGateDocs(s, d)
+    streamIngestTable(s, t, docBatch(s, docs)) {
       clearStaleSide(s, t)
-      Dedup.writeClusterIndex(
-        incrGateDocs(s, d).filter(col("doc_id") % 13 =!= 0), t)
-    } { ck =>
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val docs = incrGateDocs(s, d)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      feedStream(in, docs.filter(col("doc_id") % 13 === 0)
-        .select("doc_id", "text").as[(Long, String)])
-      graft.streaming.StreamingRollups.clusterUpsertStream(
-        in.toDF().toDF("doc_id", "text"), minhashIncrIndexTable(s, d), t,
+      Dedup.writeClusterIndex(docs.filter(col("doc_id") % 13 =!= 0), t)
+    } { (in, ck) =>
+      StreamingRollups.clusterUpsertStream(
+        in.toDF("doc_id", "text"), minhashIncrIndexTable(s, d), t,
         docs.filter(col("doc_id") % 13 =!= 0), ck, streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
     }
   }
 
@@ -1166,23 +1026,34 @@ object SparkEntry {
     */
   private def semUpsertStreamTable(s: SparkSession, d: String): String = {
     val t = s"g_gate_sem_ups_stream_${tag(d)}"
-    streamIngestTable(s, t) {
+    streamIngestTable(s, t, vecBatch(s, d)) {
       clearStaleSide(s, t)
       val residue = Tables.embeddings(s, d).filter(col("vec_id") % 13 =!= 0)
       Similarity.writeSemanticClusterIndex(residue,
         Similarity.headCodebookSized(residue), t)
-    } { ck =>
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      feedStream(in, Tables.embeddings(s, d).filter(col("vec_id") % 13 === 0)
-        .select("vec_id", "embedding")
-        .as[(Long, Array[Float])])
-      graft.streaming.StreamingRollups.semanticUpsertStream(
-        in.toDF().toDF("vec_id", "embedding"), semIncrIdx(s, d), t, ck,
+    } { (in, ck) =>
+      StreamingRollups.semanticUpsertStream(
+        in.toDF("vec_id", "embedding"), semIncrIdx(s, d), t, ck,
         streamId = Some(t))
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+    }
+  }
+
+  /** Shared plumbing of the five memory-sink stream gates: the events
+    * table replayed as ONE micro-batch ([[streamOnce]]) through a
+    * streaming `stage` into a memory sink named `name`, in output
+    * `mode`. The sink registers a temp view that dies with the session,
+    * so [[ensureTable]] guards it.
+    */
+  private def tickStreamTable(s: SparkSession, d: String, name: String, mode: String)(
+      stage: Dataset[StreamingRollups.Tick] => Dataset[_]): String = {
+    import s.implicits._
+    ensureTable(s, name) {
+      val ticks = Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+        .as[StreamingRollups.Tick]
+      streamOnce(s, name, ticks) { (in, _) =>
+        stage(in).writeStream.format("memory").queryName(name).outputMode(mode)
+      }
     }
   }
 
@@ -1195,32 +1066,9 @@ object SparkEntry {
     * (index-append) and streaming COMPUTE was spec-only. Memoized per
     * data generation like the index gates.
     */
-  // The five memory-sink stream gates guard on the SESSION catalog, not
-  // a per-JVM memo: the sink registers a temp view that dies with the
-  // session, and the bench's isolated phase re-runs suspects in a FRESH
-  // session — a JVM-wide memo made every such re-run fail
-  // TABLE_OR_VIEW_NOT_FOUND (the r16 session_stream isolated_error).
   private def ohlcStreamTable(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val name = s"g_gate_ohlc_stream_${tag(d)}"
-      if (!s.catalog.tableExists(name)) {
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[graft.streaming.StreamingRollups.Tick]
-        feedStream(in, ev.as[graft.streaming.StreamingRollups.Tick])
-        val q = graft.streaming.StreamingRollups
-          .ohlcWindowed(in.toDF(), "1 day", "10 seconds")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $name")
-      }
-      name
-    }
+    tickStreamTable(s, d, s"g_gate_ohlc_stream_${tag(d)}", "complete")(in =>
+      StreamingRollups.ohlcWindowed(in.toDF(), "1 day", "10 seconds"))
 
   /** STREAM-COMPUTED daily value rollup (the second streaming-COMPUTE
     * gate next to OHLC): the events table replayed through
@@ -1230,27 +1078,9 @@ object SparkEntry {
     * per data generation like the other stream gates.
     */
   private def rollupStreamTable(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val name = s"g_gate_rollup_stream_${tag(d)}"
-      if (!s.catalog.tableExists(name)) {
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[graft.streaming.StreamingRollups.Tick]
-        feedStream(in, ev.as[graft.streaming.StreamingRollups.Tick])
-        val q = graft.streaming.StreamingRollups
-          .windowedExact(in.toDF().withColumnRenamed("user_id", "entity_id"),
-            "1 day", "10 seconds")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $name")
-      }
-      name
-    }
+    tickStreamTable(s, d, s"g_gate_rollup_stream_${tag(d)}", "complete")(in =>
+      StreamingRollups.windowedExact(in.toDF().withColumnRenamed("user_id", "entity_id"),
+        "1 day", "10 seconds"))
 
   /** STREAM-COMPUTED CUSUM changepoint monitor (the fourth
     * streaming-COMPUTE gate — and the first WINDOWED-STATE fold gated
@@ -1267,26 +1097,10 @@ object SparkEntry {
     * than approximate.
     */
   private def cusumStreamTable(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val name = s"g_gate_cusum_stream_${tag(d)}"
-      if (!s.catalog.tableExists(name)) {
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        val calib = TimeSeries.cusumCalibration(ev)
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[graft.streaming.StreamingRollups.Tick]
-        feedStream(in, ev.as[graft.streaming.StreamingRollups.Tick])
-        val q = graft.streaming.StreamingRollups
-          .cusumStream(in.toDS(), calib, "10 seconds")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $name")
-      }
-      name
+    tickStreamTable(s, d, s"g_gate_cusum_stream_${tag(d)}", "append") { in =>
+      val calib = TimeSeries.cusumCalibration(Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts"), col("value")))
+      StreamingRollups.cusumStream(in, calib, "10 seconds")
     }
 
   /** [[cusumStreamTable]]'s sibling for the HOLT forecaster — the
@@ -1297,26 +1111,8 @@ object SparkEntry {
     * domain, same rn < m oracle restriction.
     */
   private def holtStreamTable(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val name = s"g_gate_holt_stream_${tag(d)}"
-      if (!s.catalog.tableExists(name)) {
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[graft.streaming.StreamingRollups.Tick]
-        feedStream(in, ev.as[graft.streaming.StreamingRollups.Tick])
-        val q = graft.streaming.StreamingRollups
-          .holtStream(in.toDS(), "10 seconds")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $name")
-      }
-      name
-    }
+    tickStreamTable(s, d, s"g_gate_holt_stream_${tag(d)}", "append")(in =>
+      StreamingRollups.holtStream(in, "10 seconds"))
 
   /** STREAM-COMPUTED session windows (the third streaming-COMPUTE
     * gate): the events table replayed through
@@ -1331,27 +1127,9 @@ object SparkEntry {
     * with the batch rule.
     */
   private def sessionStreamTable(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val name = s"g_gate_session_stream_${tag(d)}"
-      if (!s.catalog.tableExists(name)) {
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        val in = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[graft.streaming.StreamingRollups.Tick]
-        feedStream(in, ev.as[graft.streaming.StreamingRollups.Tick])
-        val q = graft.streaming.StreamingRollups
-          .sessionWindowed(in.toDF().withColumnRenamed("user_id", "entity_id"),
-            "30000 seconds", "10 seconds")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-        require(q.awaitTermination(120000),
-          s"stream gate build timed out: $name")
-      }
-      name
-    }
+    tickStreamTable(s, d, s"g_gate_session_stream_${tag(d)}", "complete")(in =>
+      StreamingRollups.sessionWindowed(in.toDF().withColumnRenamed("user_id", "entity_id"),
+        "30000 seconds", "10 seconds"))
 
   /** DRIFTED-THEN-RETRAINED IVF index for the retrain gate — the full
     * lifecycle the drift report exists to drive, oracle-gated end to
@@ -1364,22 +1142,15 @@ object SparkEntry {
     * live union — the retrain can move every list boundary and the
     * answer may not change.
     */
-  private val ivfRetrainBuilt = scala.collection.mutable.Set.empty[String]
   private def ivfRetrainIdx(s: SparkSession, d: String): String =
-    indexLock.synchronized {
-      val path = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_gate_ivf_retrain_${tag(d)}").toString
-      if (!ivfRetrainBuilt.contains(path)) {
-        val vecs = Tables.embeddings(s, d)
-        Similarity.writeIvfIndex(vecs.filter(col("vec_id") % 13 =!= 0), path)
-        Similarity.appendToIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 13 === 0))
-        Similarity.deleteFromIvfIndex(s, path,
-          vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
-        Similarity.retrainIvfIndex(s, path)
-        ivfRetrainBuilt += path
-      }
-      path
+    ensureDir(s"graft_gate_ivf_retrain_${tag(d)}") { path =>
+      val vecs = Tables.embeddings(s, d)
+      Similarity.writeIvfIndex(vecs.filter(col("vec_id") % 13 =!= 0), path)
+      Similarity.appendToIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 13 === 0))
+      Similarity.deleteFromIvfIndex(s, path,
+        vecs.filter(col("vec_id") % 97 === 3).select("vec_id"))
+      Similarity.retrainIvfIndex(s, path)
     }
 
   /** AGED IVF index with a SQL-REPRODUCIBLE codebook for the drift
@@ -1392,11 +1163,8 @@ object SparkEntry {
     * L2 argmin, ties to the lowest list), probe-list selection, both
     * top-k sides, and the HALF_UP recall identity.
     */
-  private val ivfDriftBuilt = scala.collection.mutable.Set.empty[String]
-  private def ivfDriftIdx(s: SparkSession, d: String): String = indexLock.synchronized {
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_gate_ivf_drift_${tag(d)}").toString
-    if (!ivfDriftBuilt.contains(path)) {
+  private def ivfDriftIdx(s: SparkSession, d: String): String =
+    ensureDir(s"graft_gate_ivf_drift_${tag(d)}") { path =>
       val vecs = Tables.embeddings(s, d)
       val residue = vecs.filter(col("vec_id") % 13 =!= 0)
       val cents = residue.orderBy("vec_id").limit(16)
@@ -1404,10 +1172,7 @@ object SparkEntry {
         .map(_.getSeq[Double](0).toArray)
       Similarity.writeIvfIndexWith(residue, path, cents)
       Similarity.appendToIvfIndex(s, path, vecs.filter(col("vec_id") % 13 === 0))
-      ivfDriftBuilt += path
     }
-    path
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // — A. rollups —
@@ -1905,9 +1670,9 @@ object SparkEntry {
     "rollup_incremental" -> ((s, d) =>
       Rollups.monthlyFromDaily(Rollups.dailyPartials(orderSeries(s, d)))),
     // the PERSISTED form: partials written once at ingest (month-
-    // partitioned), the monthly merge reads the partials table only —
-    // *_indexed naming so the bench's untimed first rep absorbs the
-    // one-time build like every other persisted artifact
+    // partitioned), the monthly merge reads the partials table only;
+    // like every other artifact it is built eagerly by its guard when
+    // the DataFrame is built, so the bench's pre-build absorbs it
     "rollup_partials_indexed" -> ((s, d) =>
       Rollups.monthlyFromPartialsCatalog(s, partialsTable(s, d))),
     "event_transitions" -> ((s, d) => Analytics.eventTransitions(Tables.events(s, d))),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,9 @@ object Verify {
     // geometry assertions (e.g. the embed band-width domain pin)
     sys.props("graft.oracle.gate") = "true"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local mode: driver-side listing of a few hundred partition
-      // dirs is microseconds; the default threshold (32) launches a
-      // distributed file-listing JOB per partitioned-table read, a
-      // fixed ~0.3 s tax that dwarfs the actual probe on persisted
-      // index tables (cluster deployments want the default back)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // Historical TIMESTAMP(NANOS) encodings surface as nanos longs
-      // (Tables.events dispatches on the actual type; no-op for micros)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // getOrCreate: called inside a running session (a harness), this
+    // returns that session; it is stopped at the end either way
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // optional 3rd arg: comma-separated subset of query names
     val subset: Set[String] =

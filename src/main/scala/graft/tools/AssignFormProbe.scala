@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure the CASE-fan-out vs broadcast-join two-level assignment
   * forms across a GRID SWEEP — the empirical basis for
   * [[graft.operators.Similarity.caseFormMaxCells]], which had been an
@@ -25,13 +23,7 @@ object AssignFormProbe {
       else Seq(24, 48, 96, 192, 384, 576)
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus)
     val vecs = graft.sources.Tables.embeddings(spark, sfDir)
     val n = vecs.count()
     val rows = grids.map { g =>

@@ -293,29 +293,100 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  // Code part of a source line: block-comment lines and `//` tails
+  // dropped, so the source guards below ignore prose.
+  private def code(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*")) "" else line.split("//", 2)(0)
+  }
+
+  /** (path relative to `root`, 1-based line number, code) of every line
+    * of every .scala file under `root`. */
+  private def sourceLines(root: java.nio.file.Path): Seq[(String, Int, String)] = {
+    import scala.jdk.CollectionConverters._
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: no $root")
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.map {
+          case (line, i) => (root.relativize(p).toString, i + 1, code(line))
+        }
+      }
+  }
+
   test("src/main opens parquet only through Tables.parquet") {
     // The read-path guard, same spirit as the plan guards: an inferring
     // `spark.read.parquet` costs a whole Spark job per open (the footer
     // read), so every parquet open in the library goes through
     // Tables.parquet, whose Spark fallback is the one allowed call.
     // tools/ mains are not library code.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: no $root")
-    def code(line: String): String = {
-      val t = line.trim
-      if (t.startsWith("*") || t.startsWith("/*")) "" else line.split("//", 2)(0)
+    val calls = sourceLines(java.nio.file.Paths.get("src/main/scala/graft")).collect {
+      case (f, n, c) if !f.startsWith("tools/") && c.contains(".read.parquet(") => s"$f:$n"
     }
-    val calls = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("tools")))
-      .toSeq.flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if code(line).contains(".read.parquet(") =>
-            s"${root.relativize(p)}:${i + 1}"
-        }
-      }
     val (helper, others) = calls.partition(_.startsWith("sources/Tables.scala:"))
     assert(others.isEmpty, s"parquet opened outside Tables.parquet: ${others.mkString(", ")}")
     assert(helper.size === 1, s"Tables.scala should call spark.read.parquet once: $helper")
+  }
+
+  test("src/main builds sessions only in GraftSession and awaits gate streams only in streamOnce") {
+    // One session factory: every main gets the same confs from
+    // GraftSession.local. One way to run a gate stream: SparkEntry's
+    // streamOnce is the only place that starts and awaits one.
+    val src = sourceLines(java.nio.file.Paths.get("src/main/scala"))
+    val builders = src.collect {
+      case (f, n, c) if c.contains("SparkSession.builder") => s"$f:$n"
+    }
+    assert(builders.nonEmpty && builders.forall(_.startsWith("graft/GraftSession.scala:")),
+      s"SparkSession.builder outside GraftSession: ${builders.mkString(", ")}")
+    val entry = src.filter(_._1 == "graft/SparkEntry.scala")
+    val start = entry.indexWhere(_._3.contains("private def streamOnce"))
+    assert(start >= 0, "SparkEntry.streamOnce not found")
+    // the helper ends where the next two-space-indented member begins
+    val end = entry.indexWhere(l => l._3.matches("  [a-z/].*"), start + 1)
+    val awaits = entry.zipWithIndex.collect {
+      case ((_, n, c), i) if c.contains("awaitTermination(") => (n, i > start && i < end)
+    }
+    assert(awaits.nonEmpty && awaits.forall(_._2),
+      s"awaitTermination outside streamOnce at SparkEntry.scala lines ${awaits.filterNot(_._2).map(_._1).mkString(", ")}")
+  }
+
+  test("gate artifacts build once: no ensureDir rewrite, no ensureTable stream restart") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val q = SparkEntry.queries
+    // ensureDir: a second build of the aged IVF index leaves every file
+    // under its assigned/ lists as it was (a rebuild clears the dir and
+    // writes new part files)
+    val assigned = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_gate_ivf_incr_${SparkEntry.tag(sfDir)}", "assigned")
+    def listing(): Map[String, Long] =
+      java.nio.file.Files.walk(assigned).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => assigned.relativize(p).toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+    q("ann_ivf_incremental")(spark, sfDir)
+    val first = listing()
+    assert(first.nonEmpty)
+    q("ann_ivf_incremental")(spark, sfDir)
+    assert(listing() === first)
+    // ensureTable: a second build of a memory-sink stream view starts no
+    // streaming query (onQueryStarted runs before start() returns)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    q("ohlc_stream_ingested")(spark, sfDir)
+    spark.streams.addListener(listener)
+    try {
+      q("ohlc_stream_ingested")(spark, sfDir)
+      assert(started.get === 0)
+      // control: once its view is gone, the same call streams again
+      spark.catalog.dropTempView(s"g_gate_ohlc_stream_${SparkEntry.tag(sfDir)}")
+      q("ohlc_stream_ingested")(spark, sfDir)
+      assert(started.get === 1)
+    } finally spark.streams.removeListener(listener)
   }
 }
