@@ -93,11 +93,7 @@ LONG_KEYS = [
 
 
 def run_bench(sf_dir, keys):
-    # SPARK_GRAFT_NO_ISOLATE: at 10x data every key legitimately
-    # exceeds the committed sf0.1 medians, so Bench's cross-round
-    # regression trigger would spawn 24 meaningless isolated re-runs
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_NO_ISOLATE="1")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32")
     subprocess.run(
         ["sbt", "-batch", f"runMain graft.Bench {','.join(keys)}"],
         cwd=REPO, env=env, check=True,
@@ -174,31 +170,6 @@ def knn_block_volume(dirs):
         rats["wide30_vs_wide10"] = round(
             out["wide30"]["pair_volume_sum_sq"] / out["wide10"]["pair_volume_sum_sq"], 2)
     out["pair_volume_ratios"] = rats
-    return out
-
-
-def assign_form_sweep():
-    """Run graft.tools.AssignFormProbe per corpus and collect the
-    per-grid (case_sec, join_sec) pairs."""
-    points = [
-        ("sf0.1", SF, "24,96,384"),
-        ("wide10", WIDE, "96,192,384,576"),
-        ("wide30", "/tmp/scale30_wide", "384,768,1536"),
-    ]
-    out = {}
-    for name, d, grids in points:
-        if not os.path.isdir(d):
-            out[name] = {"error": f"missing corpus {d}"}
-            continue
-        env = dict(os.environ, SPARK_GRAFT_CPUS="32")
-        p = subprocess.run(
-            ["sbt", "-batch",
-             f"runMain graft.tools.AssignFormProbe {d} {grids} 2"],
-            cwd=REPO, env=env, capture_output=True, text=True)
-        line = next((ln.split("] ", 1)[-1] for ln in p.stdout.splitlines()
-                     if '"grids"' in ln), None)
-        out[name] = json.loads(line) if line else {
-            "error": f"no probe output (rc={p.returncode})"}
     return out
 
 
@@ -288,21 +259,6 @@ def main():
                                    "keys": audit("semantic_twolevel_3x", ["semdedup_twolevel"],
                                                  "/tmp/scale30_wide", threshold=7.0,
                                                  base_dir=WIDE)},
-            # r16: the CASE-vs-join assignment-form crossover, MEASURED
-            # (caseFormMaxCells had been asserted): sweep the grid side
-            # on the sf0.1/wide10/wide30 corpora, timing BOTH forms with
-            # fresh plan builds per rep (the CASE plan's O(k*d) literal
-            # construction is inside the window). Reading: the join
-            # form's interpreted per-row array fold is the dominant cost
-            # at every measured (n, cells) point while the CASE plan
-            # stays compile-bounded -- the threshold is a guard against
-            # plan-size blowup at extreme k, not a mid-range crossover.
-            "assign_form_crossover": lambda: {
-                "note": "twoLevelAssigned CASE vs broadcast-join form, min of "
-                        "2 fresh-plan reps per point (graft.tools.AssignFormProbe); "
-                        "value parity is spec- and gate-asserted elsewhere",
-                "keys": {},
-                "sweep": assign_form_sweep()},
             # r15: knn_graph's timing rows read contention as easily as
             # geometry (the r14 11.75x-at-10x vs 6.75x-at-30x
             # non-curve) — so read the GEOMETRY directly: the

@@ -26,8 +26,8 @@ object GraftSession {
     *  - `spark.sql.codegen.cache.maxEntries=2000` (default 100): the
     *    ~360-key surface compiles far more than 100 codegen classes,
     *    so with the default every query evicts its predecessors and
-    *    Janino recompiles on each revisit (the isolated-rerun phase,
-    *    spec suites). 2000 holds the whole surface.
+    *    Janino recompiles on each revisit (repeated keys, spec
+    *    suites). 2000 holds the whole surface.
     *
     * `getOrCreate`: called where a session already runs (a harness
     * calling `Verify.main`), it returns that session, and only the

@@ -634,18 +634,9 @@ object Similarity {
     * geometry stays the scale-right factored one.
     */
   def headTwoLevelBooks(embeddings: DataFrame,
-                        targetCluster: Int = 256): TwoLevelBooks =
-    headTwoLevelBooksGrid(embeddings,
-      twoLevelGrid(embeddings.count(), targetCluster))
-
-  /** [[headTwoLevelBooks]] at an EXPLICIT grid side — the
-    * assignment-form crossover probe's seam
-    * ([[graft.tools.AssignFormProbe]]): measuring where the CASE
-    * fan-out's O(k·d) plan literals start losing to the broadcast-join
-    * form needs the cell count swept independently of the corpus size.
-    */
-  def headTwoLevelBooksGrid(embeddings: DataFrame, g: Int): TwoLevelBooks = {
+                        targetCluster: Int = 256): TwoLevelBooks = {
     import org.apache.spark.sql.expressions.Window
+    val g = twoLevelGrid(embeddings.count(), targetCluster)
     val coarse = headCodebook(embeddings, g)
     val withC = embeddings.select(col("vec_id"), col("embedding"),
       HashExprs.nearestCentroid(col("embedding"), coarse).as("cid"))
@@ -693,14 +684,13 @@ object Similarity {
     * Training is hierarchical k-means, fully distributed and
     * decimal-exact like [[trainCodebook]]: Lloyd's on the coarse book,
     * then JOINT Lloyd's on all fine books at once — each fine pass is
-    * one scan (cell id projected first, then the per-cell fine argmin
-    * as a lazily-evaluated CASE branch, so a row pays coarse + one
-    * cell's book), one small shuffle of k×dim partial-sum rows, and a
-    * kilobyte collect. Fine seeds are each cell's nFine
-    * smallest-xxhash members (the [[seedCodebook]] rule per cell);
-    * cells with fewer members keep a RAGGED book (assignment only ever
-    * consults a cell's real centroids, so no phantom list captures
-    * rows).
+    * one scan (the compiled two-level argmin of [[twoLevelAssigned]],
+    * so a row pays coarse + one cell's book), one small shuffle of
+    * k×dim partial-sum rows, and a kilobyte collect. Fine seeds are
+    * each cell's nFine smallest-xxhash members (the [[seedCodebook]]
+    * rule per cell); cells with fewer members keep a RAGGED book
+    * (assignment only ever consults a cell's real centroids, so no
+    * phantom list captures rows).
     *
     * Returns (coarse, fine-books, flat): `flat` has nCoarse·nFine
     * rows indexed by list_id with empty slots carrying their cell's
@@ -758,9 +748,10 @@ object Similarity {
           col("list_id"), col("embedding")).as("cs"))
         .head().getSeq[org.apache.spark.sql.Row](0)
       // clone each updated centroid ONCE per iteration (the seed arrays
-      // are shared with the assignment expression literals of the pass
-      // above, so in-place writes without a clone would corrupt them;
-      // re-cloning per (list, pos) row is O(k·d²) driver copying)
+      // are the pass above's broadcast books — in local mode the
+      // broadcast value IS these driver arrays — so in-place writes
+      // without a clone would corrupt them; re-cloning per (list, pos)
+      // row is O(k·d²) driver copying)
       val cloned = scala.collection.mutable.Set.empty[Int]
       sums.foreach { r =>
         val lid = r.getAs[Int]("list_id")
@@ -782,47 +773,21 @@ object Similarity {
     (coarse, fine, flat)
   }
 
-  /** Above this many populated coarse cells, [[twoLevelAssigned]]
-    * switches from the CASE fan-out (k·d expression payload in the
-    * plan) to the broadcast-join + array-fold form — same values
-    * (spec-asserted parity; cross-engine gated as
-    * `ivf_assign_twolevel_join`), bounded plan size. MEASURED, not
-    * asserted (the scaling audit's assign_form_crossover sweep,
-    * fresh-plan reps so CASE's plan build is inside the window): the
-    * join form's interpreted per-row array fold loses to the codegen'd
-    * CASE branches at EVERY feasible point — n=60000/d=64: 0.21 s vs
-    * 4.7 s at 384 cells, 0.38 s vs 22.3 s at 1536 cells — so the CASE
-    * plan's cost axis is not compute but TRANSPORT: its payload is
-    * Σ|fine|·d doubles ≈ k·d·8 bytes of task binary, which at
-    * 2048 cells (k ≈ 4.2M lists — a ~1B-vector corpus at the
-    * 256-target) reaches the hundreds of MB where shipping the books
-    * as a broadcast RELATION (the join form) is the only workable
-    * mechanics. The threshold is therefore a plan-size guard at the
-    * measured-safe boundary, not a mid-range crossover; it was 384
-    * (asserted) before the sweep existed.
-    */
-  private[graft] val caseFormMaxCells = 2048
-
-  /** The two-level assignment pass shared by training and
-    * [[writeTwoLevelIvfIndex]]: project the coarse cell first (one
-    * compiled nearest-centroid over √k cells), then resolve the fine
-    * centroid as a CASE over the cell id — branch VALUES evaluate
-    * lazily, so each row pays exactly its own cell's ≤ nFine distances
-    * (the 2√k·d contract). Past [[caseFormMaxCells]] populated cells
-    * the CASE plan's O(k·d) literals dominate, and the pass switches
-    * to the JOIN form: the (cell, fine centroid) books broadcast as
-    * rows, each row scores only its own cell's book via the SAME
-    * left-to-right IEEE fold the compiled expression evaluates, and a
-    * per-vector window argmin (ties to the lowest fid — the strict-less
-    * convention) picks the list. Value parity between the two forms is
-    * spec-asserted.
+  /** The two-level assignment pass shared by training, the index
+    * writers and the head-book gates: ONE compiled expression
+    * ([[HashExprs.twoLevelAssign]]) that per row picks the nearest
+    * routed coarse cell, then the nearest centroid in only that cell's
+    * fine book — each row pays coarse + one cell's ≤ nFine distances
+    * (the 2√k·d contract). The books reach the executors as one
+    * broadcast, so the plan carries no k·d constants at any grid size.
+    * A null embedding lands in the first routed cell's first list (the
+    * oracle's answer), so every input row yields exactly one output
+    * row.
     */
   private[graft] def twoLevelAssigned(embeddings: DataFrame,
                                       coarse: Array[Array[Double]],
                                       fine: Array[Array[Array[Double]]],
-                                      nFine: Int,
-                                      caseMaxCells: Int = caseFormMaxCells)
-  : DataFrame = {
+                                      nFine: Int): DataFrame = {
     // route over the NON-EMPTY cells only: a cell Lloyd's left with no
     // members has no fine book, and an APPENDED vector from a drifted
     // batch may still be nearest to it — routing it there would land
@@ -834,64 +799,11 @@ object Similarity {
     val cells = coarse.indices.filter(c => fine(c).nonEmpty)
     require(cells.nonEmpty,
       "two-level assignment needs a non-empty codebook (empty input corpus?)")
-    val routedCoarse = cells.map(coarse).toArray
-    val withC = embeddings.select(col("vec_id"), col("embedding"),
-      HashExprs.nearestCentroid(col("embedding"), routedCoarse).as("ri"))
-    if (cells.length <= caseMaxCells) {
-      // the CASE branches on the dense routed index; values evaluate
-      // lazily so a row pays coarse + ONE cell's fine distances. The
-      // otherwise() is unreachable (the routed argmin is always a valid
-      // index) — defensive identity only.
-      val listId =
-        if (cells.length == 1)
-          lit(cells.head * nFine) +
-            HashExprs.nearestCentroid(col("embedding"), fine(cells.head))
-        else cells.indices.tail
-          .foldLeft(when(col("ri") === 0,
-            lit(cells.head * nFine) +
-              HashExprs.nearestCentroid(col("embedding"), fine(cells.head)))) {
-            (acc, j) => acc.when(col("ri") === j,
-              lit(cells(j) * nFine) +
-                HashExprs.nearestCentroid(col("embedding"), fine(cells(j))))
-          }
-          .otherwise(lit(cells.head * nFine))
-      withC.select(col("vec_id"), col("embedding"),
-        listId.cast("int").as("list_id"))
-    } else {
-      // JOIN form: ONE broadcast row per routed cell carrying the
-      // cell's whole fine book as an array of (flat_id, cent) structs —
-      // k·d values shipped as DATA instead of plan constants, joined
-      // 1:1 so every input row (including a duplicate vec_id) maps to
-      // exactly one output row, with NO shuffle and no window. The
-      // argmin is a higher-order fold over the book array: per
-      // centroid, d2 is the same sequential zip_with fold as the drift
-      // report (left-to-right double adds — bit-identical to the
-      // compiled expression's while-loop), and the strict `<` keeps the
-      // FIRST minimal flat_id (the book array ascends by fid), matching
-      // the expression's strict-less first-index tie rule.
-      val spark = embeddings.sparkSession
-      import spark.implicits._
-      val books = cells.indices.map { j =>
-        (j, fine(cells(j)).zipWithIndex.map { case (cent, fid) =>
-          (cells(j) * nFine + fid, cent.toSeq)
-        }.toSeq)
-      }.toDF("ri", "book")
-        .withColumn("book", expr(
-          "transform(book, c -> named_struct('flat_id', c._1, 'cent', c._2))"))
-      val argmin = expr(
-        "aggregate(" +
-          "transform(book, c -> named_struct(" +
-            "'d2', aggregate(zip_with(embedding, c.cent, (x, y) -> " +
-              "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-              "0.0D, (a, v) -> a + v), " +
-            "'flat_id', c.flat_id)), " +
-          "named_struct('d2', CAST('Infinity' AS DOUBLE), 'flat_id', -1), " +
-          "(acc, s) -> IF(s.d2 < acc.d2, s, acc)" +
-        ").flat_id")
-      withC.join(broadcast(books), "ri")
-        .select(col("vec_id"), col("embedding"),
-          argmin.cast("int").as("list_id"))
-    }
+    val books = embeddings.sparkSession.sparkContext.broadcast(
+      graft.plans.RoutedBooks(cells.map(coarse).toArray,
+        cells.map(fine).toArray, cells.map(_ * nFine).toArray))
+    embeddings.select(col("vec_id"), col("embedding"),
+      HashExprs.twoLevelAssign(col("embedding"), books).as("list_id"))
   }
 
   /** Persist a TWO-LEVEL IVF index — [[writeIvfIndex]] past the flat
@@ -1023,25 +935,18 @@ object Similarity {
     * [[headCodebook]] convention), fine book per cell = the cell's
     * first √k members by vec_id — both pure functions of the table, so
     * DuckDB re-derives cell, fine pick, and the flattened list id.
-    * Work shape is the production two-level pass (n·2√k·d): one coarse
-    * projection, one lazily-branched fine argmin, one k-row aggregate.
+    * Work shape is the production two-level pass (n·2√k·d): one
+    * compiled coarse-then-fine argmin projection, one k-row aggregate.
     * Only the BOOKS differ from [[writeTwoLevelIvfIndex]] (head-picked
     * vs trained — an oracle cannot replay Lloyd's), which moves list
     * boundaries but not cost, exactly like [[headCodebookSized]] vs
     * [[semDedup]]'s trained codebook.
     */
   def twoLevelHeadListSizes(embeddings: DataFrame,
-                            targetCluster: Int = 256,
-                            caseMaxCells: Int = caseFormMaxCells): DataFrame = {
-    // caseMaxCells = 0 forces the JOIN-form escape — the gate twin
-    // `ivf_assign_twolevel_join` runs it against the SAME oracle as
-    // the CASE form (value parity is the escape's whole contract)
-    val books = headTwoLevelBooks(embeddings, targetCluster)
-    twoLevelAssigned(embeddings, books.coarse, books.fine, books.nFine,
-        caseMaxCells)
+                            targetCluster: Int = 256): DataFrame =
+    assignTwoLevel(embeddings, headTwoLevelBooks(embeddings, targetCluster))
       .groupBy("list_id").agg(count(lit(1)).as("n_vectors"))
       .orderBy("list_id")
-  }
 
   /** Embedding takedown for the persisted IVF index — merge-on-read
     * tombstones (the [[graft.sources.IndexMaintenance]] mechanism,

@@ -1,9 +1,12 @@
 package graft.plans
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types._
@@ -101,6 +104,13 @@ object HashExprs {
   /** IVF assignment: index of the nearest centroid (squared L2). */
   def nearestCentroid(v: Column, centroids: Array[Array[Double]]): Column =
     col(NearestCentroidExpr(expr(v), centroids))
+
+  /** Two-level IVF assignment: the flat list id of the nearest fine
+    * centroid within the nearest routed coarse cell — see
+    * [[TwoLevelAssignExpr]].
+    */
+  def twoLevelAssign(v: Column, books: Broadcast[RoutedBooks]): Column =
+    col(TwoLevelAssignExpr(expr(v), books))
 
   /** Count of whitespace-delimited tokens of `text` equal to a word
     * in `vocab` — the stopword-profile primitive behind lang_id and
@@ -217,6 +227,33 @@ object HashExprs {
   /** Read element i of a float/double array as double. */
   @inline private[plans] def elem(arr: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+
+  /** Index of the centroid nearest to `v` (squared L2): each distance
+    * sums min(|v|, |cent|) squared differences left to right, and the
+    * strict `<` keeps the FIRST index on a tie. The one argmin loop of
+    * [[NearestCentroidExpr]] and both levels of [[TwoLevelAssignExpr]].
+    */
+  private[plans] def nearestIndex(v: ArrayData, isFloat: Boolean,
+                                  centroids: Array[Array[Double]]): Int = {
+    val n = v.numElements()
+    var best = 0
+    var bestDist = Double.MaxValue
+    var c = 0
+    while (c < centroids.length) {
+      val cent = centroids(c)
+      val d = math.min(n, cent.length)
+      var dist = 0.0
+      var i = 0
+      while (i < d) {
+        val diff = elem(v, i, isFloat) - cent(i)
+        dist += diff * diff
+        i += 1
+      }
+      if (dist < bestDist) { bestDist = dist; best = c }
+      c += 1
+    }
+    best
+  }
 
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -700,26 +737,7 @@ case class NearestCentroidExpr(child: Expression, centroids: Array[Array[Double]
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   /** Public: called from generated code ([[doGenCode]]). */
-  def compute(v: ArrayData): Int = {
-    val n = v.numElements()
-    var best = 0
-    var bestDist = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      val cent = centroids(c)
-      val d = math.min(n, cent.length)
-      var dist = 0.0
-      var i = 0
-      while (i < d) {
-        val diff = HashExprs.elem(v, i, isFloat) - cent(i)
-        dist += diff * diff
-        i += 1
-      }
-      if (dist < bestDist) { bestDist = dist; best = c }
-      c += 1
-    }
-    best
-  }
+  def compute(v: ArrayData): Int = HashExprs.nearestIndex(v, isFloat, centroids)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
@@ -728,6 +746,73 @@ case class NearestCentroidExpr(child: Expression, centroids: Array[Array[Double]
     copy(child = newChild)
 
   override def prettyName: String = "nearest_centroid"
+}
+
+/** The two-level books as [[TwoLevelAssignExpr]] reads them, over the
+  * ROUTED (non-empty) cells only: `coarse(j)` is routed cell j's
+  * centroid, `fine(j)` its ragged fine book, and `listBase(j)` the flat
+  * list id of its fid 0 (cell · nFine).
+  */
+final case class RoutedBooks(coarse: Array[Array[Double]],
+                             fine: Array[Array[Array[Double]]],
+                             listBase: Array[Int])
+
+/** Two-level IVF assignment as one compiled pass per row: the coarse
+  * argmin over the routed cells, then the argmin within ONLY that
+  * cell's fine book (n·2√k·d, not n·k·d), returning
+  * `listBase(cell) + fid`. Both argmins are [[HashExprs.nearestIndex]],
+  * so a row lands exactly where the flat nearest-centroid fold puts it
+  * at each level.
+  *
+  * The books ride as a `Broadcast` handle, not as plan constants: the
+  * serialised expression, and so every task binary, is the same size
+  * at any k, and each executor fetches the k·d doubles once.
+  *
+  * A null vector is not null-in-null-out: it lands in the first routed
+  * cell's first list, the SQL oracle's answer (its all-NULL distances
+  * sort last, so the first cell and fid win). Hence the generated code
+  * below is the [[UnaryComputeCodegen]] call without its null short-cut.
+  */
+case class TwoLevelAssignExpr(child: Expression, books: Broadcast[RoutedBooks])
+    extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    HashExprs.checkNumericArray(child.dataType, "two_level_assign")
+
+  @transient private lazy val isFloat =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  // Broadcast.value synchronises on every call: read it once per task
+  @transient private lazy val routed = books.value
+
+  /** Public: called from generated code ([[doGenCode]]). */
+  def compute(v: ArrayData): Int =
+    if (v == null) routed.listBase(0)
+    else {
+      val ri = HashExprs.nearestIndex(v, isFloat, routed.coarse)
+      routed.listBase(ri) + HashExprs.nearestIndex(v, isFloat, routed.fine(ri))
+    }
+
+  override def eval(input: InternalRow): Any =
+    compute(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      int ${ev.value} = $ref.compute(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TwoLevelAssignExpr =
+    copy(child = newChild)
+
+  override def prettyName: String = "two_level_assign"
 }
 
 /** Symmetric int8 quantization summary — the storage-compression

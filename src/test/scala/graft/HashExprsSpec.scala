@@ -379,11 +379,16 @@ class HashExprsSpec extends SparkSpec {
     val emb = sources.Tables.embeddings(spark, sfDir)
     val planes = Seq(Seq(1.0, -0.5, 0.25), Seq(-1.0, 0.75, 0.5))
     val cents = Array(Array(0.0, 0.0), Array(1.0, 1.0))
+    // two routed cells with ragged fine books (2 and 1 centroids)
+    val books = spark.sparkContext.broadcast(plans.RoutedBooks(cents,
+      Array(Array(Array(0.0, 0.0), Array(0.5, 0.5)), Array(Array(1.0, 1.0))),
+      Array(0, 2)))
     val q8 = plans.HashExprs.quantizeI8(col("embedding"))
     def vecProj = emb.filter(col("vec_id") < 50).select(col("vec_id"),
       plans.HashExprs.cosineSim(col("embedding"), reverse(col("embedding"))).as("cos"),
       plans.HashExprs.signProjBits(col("embedding"), planes).as("bits"),
       plans.HashExprs.nearestCentroid(col("embedding"), cents).as("cent"),
+      plans.HashExprs.twoLevelAssign(col("embedding"), books).as("two_level"),
       plans.HashExprs.quantizeI8Stats(col("embedding")).as("qstats"),
       q8.as("q8"),
       plans.HashExprs.cosineSimI8(q8, q8).as("cos8"),
@@ -1527,26 +1532,49 @@ class HashExprsSpec extends SparkSpec {
     assert(got === Seq((7L, 9.0), (11L, 9.0), (3L, 5.0), (4L, 5.0)))
   }
 
-  test("two-level assignment: the join-form escape equals the CASE form bit-for-bit") {
+  test("two-level assignment equals a driver-side argmin; null lands in the first list") {
     import org.apache.spark.sql.functions._
-    val vecs = sources.Tables.embeddings(spark, sfDir)
+    val vecs = sources.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
     val books = operators.Similarity.headTwoLevelBooks(vecs)
-    // both forms compute the same left-to-right IEEE distance fold and
-    // the same lowest-index tie-break, so the assignment must be
-    // IDENTICAL — caseMaxCells=0 forces the broadcast-join + window
-    // argmin, MaxValue forces the CASE fan-out
-    def assigned(maxCells: Int) = operators.Similarity.twoLevelAssigned(
-        vecs, books.coarse, books.fine, books.nFine, maxCells)
-      .select("vec_id", "list_id").orderBy("vec_id")
-      .collect().map(_.toSeq).toSeq
-    assert(assigned(0) === assigned(Int.MaxValue))
-    // duplicate vec_id input rows are PRESERVED by the join form — the
-    // old window argmin (row_number over vec_id) collapsed them to one
-    // row per id, a silent cardinality break vs the CASE form
+    val cells = books.coarse.indices.filter(books.fine(_).nonEmpty)
+    // the reference fold: squared L2 over min(|v|, |cent|) dims summed
+    // left to right, strict-less so ties keep the first index
+    def nearest(v: Array[Double], cents: Seq[Array[Double]]): Int =
+      cents.indices.foldLeft((0, Double.MaxValue)) { case ((best, bestD), c) =>
+        var d = 0.0
+        (0 until math.min(v.length, cents(c).length)).foreach { i =>
+          val diff = v(i) - cents(c)(i)
+          d += diff * diff
+        }
+        if (d < bestD) (c, d) else (best, bestD)
+      }._1
+    def reference(v: Array[Double]): Int =
+      if (v == null) cells.head * books.nFine
+      else {
+        val ri = nearest(v, cells.map(books.coarse))
+        cells(ri) * books.nFine + nearest(v, books.fine(cells(ri)).toSeq)
+      }
+    // one extra row with a null embedding, under an id the corpus lacks
+    val withNull = vecs.unionByName(vecs.limit(1).select(
+      lit(-1L).cast(vecs.schema("vec_id").dataType).as("vec_id"),
+      lit(null).cast(vecs.schema("embedding").dataType).as("embedding")))
+    // float → double is exact, so the collected doubles are the values
+    // the expression reads
+    val expected = withNull
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map { r =>
+        r.getLong(0) -> reference(
+          if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)
+      }.sortBy(_._1).toSeq
+    val got = operators.Similarity.assignTwoLevel(withNull, books)
+      .select("vec_id", "list_id").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).sortBy(_._1).toSeq
+    assert(got === expected)
+    assert(got.head === (-1L -> cells.head * books.nFine))
+    // duplicate vec_id input rows are PRESERVED: one output row per
+    // input row
     val dup = vecs.limit(3).unionByName(vecs.limit(3))
-    val dupOut = operators.Similarity.twoLevelAssigned(
-      dup, books.coarse, books.fine, books.nFine, 0)
-    assert(dupOut.count() === 6L)
+    assert(operators.Similarity.assignTwoLevel(dup, books).count() === 6L)
     // the empty-codebook guard fails loudly (a NoSuchElementException
     // from cells.head was the old failure mode)
     val err = intercept[IllegalArgumentException] {
@@ -1555,6 +1583,22 @@ class HashExprsSpec extends SparkSpec {
           Array(Array(0.0, 0.0)), Array(Array.empty[Array[Double]]), 1))
     }
     assert(err.getMessage.contains("non-empty codebook"))
+    // the books travel by broadcast, not inside the expression: it
+    // serialises to the same size at 4 cells and at 64
+    def serialisedSize(nCells: Int): Int = {
+      val cents = Array.tabulate(nCells)(c => Array.fill(64)(c.toDouble))
+      val b = spark.sparkContext.broadcast(plans.RoutedBooks(cents,
+        cents.map(Array(_)), Array.tabulate(nCells)(identity)))
+      val e = plans.TwoLevelAssignExpr(
+        org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.FloatType), nullable = true), b)
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(e) finally out.close()
+      bytes.size
+    }
+    assert(serialisedSize(4) === serialisedSize(64))
   }
 
   test("staged upsert commit: no crash window loses member rows; recovery and replay fold idempotently") {

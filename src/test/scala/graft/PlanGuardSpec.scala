@@ -293,6 +293,21 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  test("two-level assignment plans as one compiled expression: no join, no CASE") {
+    // the coarse-then-fine argmin is one expression over broadcast
+    // books; neither the per-cell CASE fan-out nor a books join may
+    // come back into the optimised plan
+    val plan = SparkEntry.queries("ivf_assign_twolevel")(spark, sfDir)
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val joins = plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(joins.isEmpty, s"join in the two-level assignment plan:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.CaseWhen]),
+      s"CASE in the two-level assignment plan:\n$plan")
+    assert(exprs.exists(_.isInstanceOf[plans.TwoLevelAssignExpr]),
+      s"no two_level_assign in the plan:\n$plan")
+  }
+
   // Code part of a source line: block-comment lines and `//` tails
   // dropped, so the source guards below ignore prose.
   private def code(line: String): String = {
@@ -319,9 +334,8 @@ class PlanGuardSpec extends SparkSpec {
     // `spark.read.parquet` costs a whole Spark job per open (the footer
     // read), so every parquet open in the library goes through
     // Tables.parquet, whose Spark fallback is the one allowed call.
-    // tools/ mains are not library code.
     val calls = sourceLines(java.nio.file.Paths.get("src/main/scala/graft")).collect {
-      case (f, n, c) if !f.startsWith("tools/") && c.contains(".read.parquet(") => s"$f:$n"
+      case (f, n, c) if c.contains(".read.parquet(") => s"$f:$n"
     }
     val (helper, others) = calls.partition(_.startsWith("sources/Tables.scala:"))
     assert(others.isEmpty, s"parquet opened outside Tables.parquet: ${others.mkString(", ")}")
