@@ -93,7 +93,10 @@ LONG_KEYS = [
 
 
 def run_bench(sf_dir, keys):
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32")
+    # the caller's core count, else this host's: a local[N] wider than
+    # the machine times thread contention, not scaling
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     subprocess.run(
         ["sbt", "-batch", f"runMain graft.Bench {','.join(keys)}"],
         cwd=REPO, env=env, check=True,

@@ -1398,17 +1398,25 @@ object Dedup {
     * edges are their own singleton). Public so any pair source
     * (simhash, embedding cosine, …) can feed the same clustering.
     */
-  def clusterPairs(pairs: DataFrame, allDocs: DataFrame, maxIter: Int = 8,
-                   numParts: Int = 0): DataFrame = {
+  def clusterPairs(pairs: DataFrame, allDocs: DataFrame, maxIter: Int = 8): DataFrame =
+    clusterPairsWith(pairs, allDocs, maxIter, maxDriverEdges = 2000000L)
+
+  /** [[clusterPairs]] with the driver-path edge gate given — package-
+    * visible so the spec can force the distributed path on a small
+    * graph and pin both paths value-identical.
+    */
+  private[graft] def clusterPairsWith(pairs: DataFrame, allDocs: DataFrame,
+                                      maxIter: Int,
+                                      maxDriverEdges: Long): DataFrame = {
     // SIZE-GATED exact path: a near-dup edge set that fits the driver
-    // (retained state two primitive long arrays, 16 bytes/edge; default
-    // gate 2M edges ≈ 32 MB plus the union-find maps — the broadcast-
-    // relation class of driver state, parameterizable like a join
-    // threshold; the collected Row array is transient, dropped right
-    // after the primitive decode) is clustered with a min-root
-    // union-find and the labels broadcast back. This replaces ~10
-    // barrier jobs (per-round join/checkpoint/sum at a fixed wall cost
-    // regardless of edge count) with ONE limit(max+1) collect (the
+    // (retained state two primitive long arrays, 16 bytes/edge; the
+    // gate is 2M edges ≈ 32 MB plus the union-find maps — the broadcast-
+    // relation class of driver state; the collected Row array is
+    // transient, dropped right after the primitive decode) is
+    // clustered with a min-root union-find and the labels broadcast
+    // back. This replaces ~10 barrier jobs (per-round join/checkpoint/
+    // sum at a fixed wall cost regardless of edge count) with ONE
+    // limit(max+1) collect (the
     // limit truncates the pipeline early when the set is huge, and a
     // full result ≤ max proves the gate held — no separate
     // checkpoint/count jobs) + one broadcast join. It is also EXACT at
@@ -1417,16 +1425,7 @@ object Dedup {
     // which a chain-shaped component can exceed. Above the gate (true
     // 100 TB edge volumes) the distributed path runs unchanged.
     val spark = pairs.sparkSession
-    val driverEdgeMax = spark.conf.getOption("graft.cluster.driverEdgeMax")
-      .orElse(sys.env.get("GRAFT_CLUSTER_DRIVER_EDGE_MAX"))
-      .map { v =>
-        try v.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            "graft.cluster.driverEdgeMax / GRAFT_CLUSTER_DRIVER_EDGE_MAX " +
-              s"must be a long edge count, got '$v'")
-        }
-      }.getOrElse(2000000L)
-    val probeLimit = math.min(driverEdgeMax + 1L, Int.MaxValue.toLong - 1L).toInt
+    val probeLimit = math.min(maxDriverEdges + 1L, Int.MaxValue.toLong - 1L).toInt
     // The narrowed pair frame is PERSISTED across the gate probe: the
     // probe's executeTake computes (and caches) a prefix of its
     // partitions, so when the edge set exceeds the gate the
@@ -1439,7 +1438,7 @@ object Dedup {
       .persist()
     val probeRows = pairsNarrow.limit(probeLimit).collect()
     val nProbe = probeRows.length
-    if (nProbe <= driverEdgeMax) {
+    if (nProbe <= maxDriverEdges) {
       import spark.implicits._
       pairsNarrow.unpersist()
       // decode straight into primitive long arrays (a boxed
@@ -1505,14 +1504,9 @@ object Dedup {
     // Propagation parallelism SIZED BY THE EDGE COUNT (the round-11
     // fixed coalesce(1) was right for gate-scale edge sets but a
     // serial barrier at 100 TB edge volumes): ~250k edges per
-    // partition, clamped to the session's shuffle parallelism;
-    // callers that know their edge volume can pass numParts directly.
-    val p =
-      if (numParts > 0) numParts
-      else {
-        val sp = edges0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        math.max(1, math.min(sp, ((2 * nEdges - 1) / 250000L + 1L).toInt))
-      }
+    // partition, clamped to the session's shuffle parallelism.
+    val sp = edges0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val p = math.max(1, math.min(sp, ((2 * nEdges - 1) / 250000L + 1L).toInt))
     val edges = edges0.coalesce(math.max(p, 4))
     // start: every doc labels itself with the min direct neighbor
     var labels = edges.groupBy(col("a").as("doc_id"))
@@ -1562,15 +1556,12 @@ object Dedup {
       // chains whose labels are final after the init neighbor-min, so
       // the round-0 probe exits after a single propagation round
       if (i % 2 == 0 || i == maxIter - 1) {
-        val t0 = System.nanoTime()
         labels = labels.coalesce(p).localCheckpoint(true)
         val s = labelSum(labels)
         // labels only ever decrease, so an unchanged sum across TWO
         // rounds is still exactly the fixed point
         converged = s == prevSum
         prevSum = s
-        if (sys.env.contains("GRAFT_DEBUG_CLUSTER"))
-          System.err.println(f"[cluster] round $i barrier: ${(System.nanoTime() - t0) / 1e9}%.2f s, sum=$s converged=$converged")
       }
       i += 1
     }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured Streaming counterparts of the batch operators.
   *
@@ -13,6 +14,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * is bounded. `readStream → transform → writeStream` composes with
   * every batch operator in this package that is expressible under
   * streaming semantics.
+  *
+  * DAY-CLOSE DRIVER (the eleven indicator streams: [[rsiStream]],
+  * [[macdStream]], [[keltnerStream]], [[supertrendStream]],
+  * [[donchianStream]], [[movers]], [[heikinAshiStream]],
+  * [[adxStream]], [[cusumStream]], [[holtStream]],
+  * [[holtWintersStream]]): one private flatMapGroupsWithState loop
+  * runs them all, and each indicator supplies only its initial fold
+  * state and `closeDay(user, state, bar)` — the fold's step over one
+  * finished day, emitting at most one point. Per series and
+  * micro-batch the driver sorts the rows by (epoch-micros, event_id)
+  * (groups arrive unordered) and buckets them into UTC `yyyy-MM-dd`
+  * days, prices as HALF_UP cents. A tick on a LATER day than the open
+  * bar closes that bar and opens a new one; a tick on the SAME day
+  * updates high/low, the close when its order key (epoch-micros ‖
+  * event_id, the batch min_by/max_by key) is greater than the bar's
+  * last, and the open when it is less than the bar's first; a tick on
+  * an already-closed day is dropped (late past the day boundary — the
+  * [[transitions]] staleness trade, bounded by the upstream
+  * watermark). The state is the open bar plus the fold state of
+  * completed days, so a bar spans micro-batches; the event-time
+  * timeout is max(last tick + idleMs, watermark + 1).
   *
   * IDLE-TIMEOUT CONVENTION (all fold-state indicator streams): a
   * series idle past `idleMs` has its state dropped WITHOUT emitting
@@ -140,7 +162,15 @@ object StreamingRollups {
       .dropDuplicates("entity_id", "ts", "value")
 
   case class Event(entity_id: Long, ts: java.sql.Timestamp, value: Double)
+  /** A priced tick of one series: what the day-close driver folds. */
+  trait DayTick {
+    def user_id: Long
+    def event_id: Long
+    def ts: java.sql.Timestamp
+    def value: Double
+  }
   case class Tick(user_id: Long, event_id: Long, ts: java.sql.Timestamp, value: Double)
+    extends DayTick
   case class Session(entity_id: Long, start: java.sql.Timestamp, end: java.sql.Timestamp,
                      n_events: Long, total_value: Double)
   // NOT private: the state encoder's generated code instantiates this
@@ -965,45 +995,135 @@ object StreamingRollups {
       }
   }
 
+  // NOT private (the SessionState encoder contract). The open day's
+  // bar in cents: open/close are the values at the least/greatest
+  // order key seen for the day, high/low its extremes.
+  case class DayBar(day: String, firstKey: String, lastKey: String,
+                    open: Long, high: Long, low: Long, close: Long)
+  // the driver's per-series state: the open bar plus the indicator's
+  // fold state of COMPLETED days
+  case class DayState[S](bar: DayBar, ind: S)
+
+  // the batch folds' signed HALF_UP integer identities: n/d and n/2
+  private def divHU(num: Long, den: Long): Long =
+    if (num >= 0) (2 * num + den) / (2 * den)
+    else -((2 * -num + den) / (2 * den))
+  private def halfHU(n: Long): Long = if (n >= 0) (n + 1) / 2 else -((-n + 1) / 2)
+
+  // the day's true range in micro-cents (yesterday's close widens it
+  // once one exists) — the TR leg of the Keltner, SuperTrend and ADX folds
+  private def trueRange(bar: DayBar, hasPrev: Boolean, prevClose: Long): Long =
+    (if (!hasPrev) bar.high - bar.low
+    else math.max(bar.high - bar.low,
+      math.max(math.abs(bar.high - prevClose), math.abs(bar.low - prevClose)))) * 1000000L
+
+  // one Wilder step: buffer x until n values exist, seed with their
+  // HALF_UP mean, then acc ← HALF_UP((acc·(n−1) + x)/n); returns
+  // (seeded, acc, buffer)
+  private def wilder(seeded: Boolean, acc: Long, buf: Seq[Long], x: Long,
+                     n: Int): (Boolean, Long, Seq[Long]) =
+    if (seeded) (true, divHU(acc * (n - 1) + x, n), buf)
+    else {
+      val b = buf :+ x
+      if (b.size == n) (true, divHU(b.sum, n), Seq.empty[Long]) else (false, 0L, b)
+    }
+
+  /** The DAY-CLOSE DRIVER every indicator stream runs on (see the
+    * object doc): the indicator supplies its initial fold state, made
+    * from the group's first row, and `closeDay(user, state, bar)`, the
+    * fold's one step over a finished day; the driver does the rest.
+    * `flushOnTimeout` runs `closeDay` on the open bar when the idle
+    * timeout drops a series, emitting its point instead of discarding
+    * the day.
+    */
+  private def dayClose[R <: DayTick, S: TypeTag, P <: Product : TypeTag](
+      ticks: Dataset[R], watermarkDelay: String, idleMs: Long,
+      flushOnTimeout: Boolean = false)(init: R => S)(
+      closeDay: (Long, S, DayBar) => (S, Option[P])): Dataset[P] = {
+    import ticks.sparkSession.implicits._
+    ticks
+      .withWatermark("ts", watermarkDelay)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[DayState[S], P](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (user: Long, rows: Iterator[R], state: GroupState[DayState[S]]) =>
+          if (state.hasTimedOut) {
+            val flushed =
+              if (!flushOnTimeout) None
+              else state.getOption.flatMap(s => closeDay(user, s.ind, s.bar)._2)
+            state.remove()
+            flushed.iterator
+          } else {
+            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
+            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
+            // full microsecond precision (getTime truncates to ms; the
+            // sub-ms part lives in getNanos) — must match the batch
+            // unix_micros order or same-ms closes could disagree
+            def micros(t: R) =
+              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
+            // mirrors the batch lpad(event_id, 12, '0') key, which
+            // ASSUMES ids fit 12 digits (lpad would truncate, %012d
+            // would widen — both silently misorder): fail loudly at
+            // the boundary instead of diverging from batch parity
+            def okey(t: R) = {
+              require(t.event_id >= 0 && t.event_id < 1000000000000L,
+                s"event_id ${t.event_id} outside the 12-digit order-key domain")
+              f"${micros(t)}%020d${t.event_id}%012d"
+            }
+            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
+              .setScale(2, java.math.RoundingMode.HALF_UP)
+              .movePointRight(2).longValueExact()
+            val sorted = rows.toSeq.sortBy(t => (micros(t), t.event_id))
+            val prior = state.getOption
+            var bar = prior.map(_.bar).orNull
+            var ind = prior.fold(init(sorted.head))(_.ind)
+            val out = Seq.newBuilder[P]
+            var lastTs = 0L
+            sorted.foreach { t =>
+              val day = fmt.format(t.ts)
+              lastTs = math.max(lastTs, t.ts.getTime)
+              if (bar == null || day > bar.day) {
+                // a later day: the open bar is final — fold it, then
+                // open the new day's bar
+                if (bar != null) {
+                  val (next, point) = closeDay(user, ind, bar)
+                  ind = next
+                  out ++= point
+                }
+                val (k, c) = (okey(t), cents(t.value))
+                bar = DayBar(day, k, k, c, c, c, c)
+              } else if (day == bar.day) {
+                val (k, c) = (okey(t), cents(t.value))
+                bar = bar.copy(high = math.max(bar.high, c), low = math.min(bar.low, c))
+                if (k > bar.lastKey) bar = bar.copy(lastKey = k, close = c)
+                if (k < bar.firstKey) bar = bar.copy(firstKey = k, open = c)
+              }
+              // day < bar.day: late past the day boundary — dropped
+            }
+            state.update(DayState(bar, ind))
+            state.setTimeoutTimestamp(
+              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
+            out.result().iterator
+          }
+      }
+  }
+
   case class RsiPoint(user_id: Long, day: String, rsi_bp: Long)
   // NOT private (SessionState contract). deltas = the last ≤n
   // close-to-close cent deltas of COMPLETED days, oldest first.
-  case class RsiState(lastFinalDay: String, lastFinalClose: Long,
-                      openDay: String, openOkey: String, openClose: Long,
-                      deltas: Seq[Long])
-
-  /** The day-finalize step shared by the in-stream day-boundary roll
-    * and the timeout flush: roll the completed open day's close-to-
-    * close delta into the deque; the RSI emits once n deltas exist —
-    * the SAME HALF_UP integer identity as the batch fold.
-    */
-  private def rsiFinalize(st: RsiState, n: Int): (Seq[Long], Option[Long]) = {
-    val deltas =
-      if (st.lastFinalDay == null) st.deltas
-      else (st.deltas :+ (st.openClose - st.lastFinalClose)).takeRight(n)
-    val rsi =
-      if (deltas.size == n) {
-        val g = deltas.filter(_ > 0).sum
-        val l = -deltas.filter(_ < 0).sum
-        Some(if (g + l == 0) 5000L
-        else (2 * g * 10000 + (g + l)) / (2 * (g + l)))
-      } else None
-    (deltas, rsi)
-  }
+  case class RsiState(hasPrev: Boolean, prevClose: Long, deltas: Seq[Long])
 
   /** Streaming Cutler RSI — a windowed indicator as BOUNDED per-series
-    * state: n delta longs plus the [[movers]] day-tracking scalars,
-    * regardless of tick volume. The first tick of a new day finalizes
-    * the open one; its close-to-close delta rolls into the deque, and
-    * once n deltas exist the finalized day emits its RSI in integer
-    * bp — bit-equal to the batch [[graft.operators.Finance.rsiCutler]]
+    * state: n delta longs plus the previous day's close, regardless of
+    * tick volume. Each closed day's close-to-close delta rolls into
+    * the deque, and once n deltas exist the day emits its RSI in
+    * integer bp — bit-equal to the batch [[graft.operators.Finance.rsiCutler]]
     * row (same HALF_UP identity, same flat-frame 5000 convention).
     * Parity therefore holds on every series day the batch emits EXCEPT
-    * its last (still open; the spec pins exactly that). Late-past-the-
-    * day-boundary ticks drop — the [[movers]] staleness trade.
+    * its last (still open; the spec pins exactly that).
     *
     * `emitOpenOnTimeout = true` FLUSHES the still-open day when the
-    * idle timeout drops the series' state (the same finalize step a
+    * idle timeout drops the series' state (the same fold step a
     * day-boundary tick would run, so the flushed row is the batch row
     * for that day) — closing the documented idle-gap caveat for
     * monitoring deployments that prefer a final reading over silence
@@ -1014,64 +1134,21 @@ object StreamingRollups {
   def rsiStream(ticks: Dataset[Tick], watermarkDelay: String, n: Int = 14,
                 idleMs: Long = 7L * 24 * 3600 * 1000,
                 emitOpenOnTimeout: Boolean = false): Dataset[RsiPoint] = {
-    import ticks.sparkSession.implicits._
     require(n >= 2, s"RSI window must be >= 2, got $n")
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RsiState, RsiPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[RsiState]) =>
-          if (state.hasTimedOut) {
-            val flushed =
-              if (!emitOpenOnTimeout) Seq.empty
-              else state.getOption.toSeq.flatMap { st =>
-                if (st.openDay == null) Seq.empty
-                else rsiFinalize(st, n)._2.map(RsiPoint(user, st.openDay, _))
-              }
-            state.remove()
-            flushed.iterator
-          }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            // mirrors the batch lpad(event_id, 12, '0') key, which
-            // ASSUMES ids fit 12 digits (lpad would truncate, %012d
-            // would widen — both silently misorder): fail loudly at
-            // the boundary instead of diverging from batch parity
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            val out = Seq.newBuilder[RsiPoint]
-            var st = state.getOption
-              .getOrElse(RsiState(null, 0L, null, null, 0L, Seq.empty))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t), openClose = cents(t.value))
-              else if (day > st.openDay) {
-                val (deltas, rsi) = rsiFinalize(st, n)
-                rsi.foreach(r => out += RsiPoint(user, st.openDay, r))
-                st = RsiState(st.openDay, st.openClose,
-                  day, okey(t), cents(t.value), deltas)
-              } else if (day == st.openDay && okey(t) > st.openOkey)
-                st = st.copy(openOkey = okey(t), openClose = cents(t.value))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
+    dayClose(ticks, watermarkDelay, idleMs, emitOpenOnTimeout)(
+      _ => RsiState(hasPrev = false, 0L, Seq.empty)) { (user, st, bar) =>
+      val deltas =
+        if (!st.hasPrev) st.deltas
+        else (st.deltas :+ (bar.close - st.prevClose)).takeRight(n)
+      val rsi =
+        if (deltas.size == n) {
+          val g = deltas.filter(_ > 0).sum
+          val l = -deltas.filter(_ < 0).sum
+          Some(RsiPoint(user, bar.day,
+            if (g + l == 0) 5000L else (2 * g * 10000 + (g + l)) / (2 * (g + l))))
+        } else None
+      (RsiState(hasPrev = true, bar.close, deltas), rsi)
+    }
   }
 
   case class MacdPoint(user_id: Long, day: String, macd: Double,
@@ -1081,101 +1158,47 @@ object StreamingRollups {
   // fold's integer convention) — the entire indicator state,
   // regardless of tick volume; seeded=false until the first day
   // closes (the seed-from-first-close convention).
-  case class MacdState(openDay: String, openOkey: String, openClose: Long,
-                       seeded: Boolean, e12: Long, e26: Long, sig: Long)
+  case class MacdState(seeded: Boolean, e12: Long, e26: Long, sig: Long)
 
   /** Streaming MACD — the EMA recursion as THREE LONGS of per-series
     * state (the recursive indicator is the best case for streaming:
     * where the batch fold carries the whole day array, the stream
-    * carries just the current EMA scalars). The first tick of a new
-    * day finalizes the open one: its close updates e12/e26 with the
-    * SAME micro-cent HALF_UP integer step the batch
-    * [[graft.operators.Finance.macd]] fold applies, so every
+    * carries just the current EMA scalars). Each closed day's close
+    * updates e12/e26 with the SAME micro-cent HALF_UP integer step the
+    * batch [[graft.operators.Finance.macd]] fold applies, so every
     * finalized day's (macd, signal, histogram) is bit-equal to the
     * batch row — parity on every series day except its still-open
-    * last (spec-pinned). Late-past-the-day-boundary ticks drop — the
-    * [[movers]] staleness trade.
+    * last (spec-pinned).
     */
   def macdStream(ticks: Dataset[Tick], watermarkDelay: String,
                  fast: Int = 12, slow: Int = 26, signalN: Int = 9,
                  idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[MacdPoint] = {
-    import ticks.sparkSession.implicits._
     require(1 < fast && fast < slow, s"need 1 < fast < slow, got ($fast, $slow)")
     require(signalN > 1, s"signal period must be > 1, got $signalN")
-    // the batch fold's signed HALF_UP integer identity, micro-cents
-    def divHU(num: Long, den: Long): Long =
-      if (num >= 0) (2 * num + den) / (2 * den)
-      else -((2 * -num + den) / (2 * den))
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[MacdState, MacdPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[MacdState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: advance the EMA scalars exactly
-            // like one step of the batch fold, emit the day's point
-            def closeDay(st: MacdState): (MacdState, MacdPoint) = {
-              val ck = st.openClose * 1000000L
-              val (e12, e26, macd, sig) =
-                if (!st.seeded) (ck, ck, 0L, 0L)
-                else {
-                  val n12 = divHU(2 * ck + (fast - 1) * st.e12, fast + 1)
-                  val n26 = divHU(2 * ck + (slow - 1) * st.e26, slow + 1)
-                  val m = n12 - n26
-                  (n12, n26, m, divHU(2 * m + (signalN - 1) * st.sig, signalN + 1))
-                }
-              (st.copy(seeded = true, e12 = e12, e26 = e26, sig = sig),
-                MacdPoint(user, st.openDay, macd.toDouble / 100000000.0,
-                  sig.toDouble / 100000000.0, (macd - sig).toDouble / 100000000.0))
-            }
-            val out = Seq.newBuilder[MacdPoint]
-            var st = state.getOption
-              .getOrElse(MacdState(null, null, 0L, seeded = false, 0L, 0L, 0L))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t), openClose = cents(t.value))
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                out += point
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openClose = cents(t.value))
-              } else if (day == st.openDay && okey(t) > st.openOkey)
-                st = st.copy(openOkey = okey(t), openClose = cents(t.value))
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
+    dayClose(ticks, watermarkDelay, idleMs)(
+      _ => MacdState(seeded = false, 0L, 0L, 0L)) { (user, st, bar) =>
+      // one step of the batch fold, then the day's point
+      val ck = bar.close * 1000000L
+      val (e12, e26, macd, sig) =
+        if (!st.seeded) (ck, ck, 0L, 0L)
+        else {
+          val n12 = divHU(2 * ck + (fast - 1) * st.e12, fast + 1)
+          val n26 = divHU(2 * ck + (slow - 1) * st.e26, slow + 1)
+          val m = n12 - n26
+          (n12, n26, m, divHU(2 * m + (signalN - 1) * st.sig, signalN + 1))
+        }
+      (MacdState(seeded = true, e12, e26, sig),
+        Some(MacdPoint(user, bar.day, macd.toDouble / 100000000.0,
+          sig.toDouble / 100000000.0, (macd - sig).toDouble / 100000000.0)))
+    }
   }
 
   case class KeltnerPoint(user_id: Long, day: String, mid: Double,
                           atr: Double, upper_band: Double, lower_band: Double)
   // NOT private (the SessionState encoder contract). midEma/atr are
   // micro-cent longs; trBuf holds ≤ atrN pre-seed true ranges (the
-  // RsiState.deltas pattern — bounded by the period, not the volume);
-  // open* track the accumulating day's own H/L/C for its TR.
-  case class KeltnerState(openDay: String, openOkey: String,
-                          openH: Long, openL: Long, openClose: Long,
-                          prevClose: Long, hasPrev: Boolean,
+  // RsiState.deltas pattern — bounded by the period, not the volume).
+  case class KeltnerState(prevClose: Long, hasPrev: Boolean,
                           midSeeded: Boolean, midEma: Long,
                           atrSeeded: Boolean, atr: Long, trBuf: Seq[Long])
 
@@ -1192,86 +1215,23 @@ object StreamingRollups {
   def keltnerStream(ticks: Dataset[Tick], watermarkDelay: String,
                     emaN: Int = 20, atrN: Int = 10, mult: Int = 2,
                     idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[KeltnerPoint] = {
-    import ticks.sparkSession.implicits._
     require(emaN >= 2 && atrN >= 1, s"need emaN >= 2, atrN >= 1, got ($emaN, $atrN)")
-    def divHU(num: Long, den: Long): Long =
-      if (num >= 0) (2 * num + den) / (2 * den)
-      else -((2 * -num + den) / (2 * den))
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeltnerState, KeltnerPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[KeltnerState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: one step of each batch fold
-            def closeDay(st: KeltnerState): (KeltnerState, Option[KeltnerPoint]) = {
-              val typ = divHU((st.openH + st.openL + st.openClose) * 1000000L, 3)
-              val mid = if (!st.midSeeded) typ
-                else divHU(2 * typ + (emaN - 1) * st.midEma, emaN + 1)
-              val tr = (if (!st.hasPrev) st.openH - st.openL
-                else math.max(st.openH - st.openL,
-                  math.max(math.abs(st.openH - st.prevClose),
-                    math.abs(st.openL - st.prevClose)))) * 1000000L
-              val (atrSeeded, atr, buf) =
-                if (st.atrSeeded) (true, divHU(st.atr * (atrN - 1) + tr, atrN), st.trBuf)
-                else {
-                  val b = st.trBuf :+ tr
-                  if (b.size == atrN) (true, divHU(b.sum, atrN), Seq.empty[Long])
-                  else (false, 0L, b)
-                }
-              val next = st.copy(prevClose = st.openClose, hasPrev = true,
-                midSeeded = true, midEma = mid, atrSeeded = atrSeeded,
-                atr = atr, trBuf = buf)
-              val point = if (atrSeeded) Some(KeltnerPoint(user, st.openDay,
-                mid.toDouble / 100000000.0, atr.toDouble / 100000000.0,
-                (mid + mult * atr).toDouble / 100000000.0,
-                (mid - mult * atr).toDouble / 100000000.0)) else None
-              (next, point)
-            }
-            val out = Seq.newBuilder[KeltnerPoint]
-            var st = state.getOption.getOrElse(KeltnerState(
-              null, null, 0L, 0L, 0L, 0L, hasPrev = false,
-              midSeeded = false, 0L, atrSeeded = false, 0L, Seq.empty))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                point.foreach(out += _)
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              } else if (day == st.openDay) {
-                st = st.copy(openH = math.max(st.openH, c),
-                  openL = math.min(st.openL, c))
-                if (okey(t) > st.openOkey)
-                  st = st.copy(openOkey = okey(t), openClose = c)
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
+    dayClose(ticks, watermarkDelay, idleMs)(_ => KeltnerState(
+      0L, hasPrev = false, midSeeded = false, 0L, atrSeeded = false, 0L,
+      Seq.empty)) { (user, st, bar) =>
+      // one step of each batch fold
+      val typ = divHU((bar.high + bar.low + bar.close) * 1000000L, 3)
+      val mid = if (!st.midSeeded) typ
+        else divHU(2 * typ + (emaN - 1) * st.midEma, emaN + 1)
+      val (atrSeeded, atr, buf) = wilder(st.atrSeeded, st.atr, st.trBuf,
+        trueRange(bar, st.hasPrev, st.prevClose), atrN)
+      val point = if (atrSeeded) Some(KeltnerPoint(user, bar.day,
+        mid.toDouble / 100000000.0, atr.toDouble / 100000000.0,
+        (mid + mult * atr).toDouble / 100000000.0,
+        (mid - mult * atr).toDouble / 100000000.0)) else None
+      (KeltnerState(bar.close, hasPrev = true, midSeeded = true, mid,
+        atrSeeded, atr, buf), point)
+    }
   }
 
   case class SupertrendPoint(user_id: Long, day: String, upper_band: Double,
@@ -1281,9 +1241,7 @@ object StreamingRollups {
   // buffer: ATR Wilder state, the two ratcheting final bands, and the
   // trend sign — state that both carries and branches, per series,
   // never tick volume.
-  case class SupertrendState(openDay: String, openOkey: String,
-                             openH: Long, openL: Long, openClose: Long,
-                             prevClose: Long, hasPrev: Boolean,
+  case class SupertrendState(prevClose: Long, hasPrev: Boolean,
                              atrSeeded: Boolean, atr: Long, trBuf: Seq[Long],
                              stSeeded: Boolean, fu: Long, fl: Long, td: Long)
 
@@ -1303,99 +1261,37 @@ object StreamingRollups {
   def supertrendStream(ticks: Dataset[Tick], watermarkDelay: String,
                        n: Int = 7, mult: Int = 3,
                        idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[SupertrendPoint] = {
-    import ticks.sparkSession.implicits._
     require(n >= 1, s"SuperTrend ATR window must be >= 1, got $n")
-    def divHU(num: Long, den: Long): Long =
-      if (num >= 0) (2 * num + den) / (2 * den)
-      else -((2 * -num + den) / (2 * den))
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SupertrendState, SupertrendPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[SupertrendState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    dayClose(ticks, watermarkDelay, idleMs)(_ => SupertrendState(
+      0L, hasPrev = false, atrSeeded = false, 0L, Seq.empty,
+      stSeeded = false, 0L, 0L, 0L)) { (user, st, bar) =>
+      // one ATR step, then the band fold
+      val (atrSeeded, atr, buf) = wilder(st.atrSeeded, st.atr, st.trBuf,
+        trueRange(bar, st.hasPrev, st.prevClose), n)
+      val base = st.copy(prevClose = bar.close, hasPrev = true,
+        atrSeeded = atrSeeded, atr = atr, trBuf = buf)
+      if (!atrSeeded) (base, None)
+      else {
+        val mid = (bar.high + bar.low) * 500000L
+        val cu = bar.close * 1000000L
+        val bu = mid + mult * atr
+        val bl = mid - mult * atr
+        val (fu, fl, td) =
+          if (!st.stSeeded) // the first ATR row seeds the bands
+            (bu, bl, if (cu > bu) 1L else if (cu < bl) -1L else 1L)
           else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: one ATR step, then the band fold
-            def closeDay(st: SupertrendState): (SupertrendState, Option[SupertrendPoint]) = {
-              val tr = (if (!st.hasPrev) st.openH - st.openL
-                else math.max(st.openH - st.openL,
-                  math.max(math.abs(st.openH - st.prevClose),
-                    math.abs(st.openL - st.prevClose)))) * 1000000L
-              val (atrSeeded, atr, buf) =
-                if (st.atrSeeded) (true, divHU(st.atr * (n - 1) + tr, n), st.trBuf)
-                else {
-                  val b = st.trBuf :+ tr
-                  if (b.size == n) (true, divHU(b.sum, n), Seq.empty[Long])
-                  else (false, 0L, b)
-                }
-              val base = st.copy(prevClose = st.openClose, hasPrev = true,
-                atrSeeded = atrSeeded, atr = atr, trBuf = buf)
-              if (!atrSeeded) (base, None)
-              else {
-                val mid = (st.openH + st.openL) * 500000L
-                val cu = st.openClose * 1000000L
-                val bu = mid + mult * atr
-                val bl = mid - mult * atr
-                val (fu, fl, td) =
-                  if (!st.stSeeded) // the first ATR row seeds the bands
-                    (bu, bl, if (cu > bu) 1L else if (cu < bl) -1L else 1L)
-                  else {
-                    val pc = st.prevClose * 1000000L // yesterday's close
-                    val fuT = if (bu < st.fu || pc > st.fu) bu else st.fu
-                    val flT = if (bl > st.fl || pc < st.fl) bl else st.fl
-                    (fuT, flT,
-                      if (cu > fuT) 1L else if (cu < flT) -1L else st.td)
-                  }
-                (base.copy(stSeeded = true, fu = fu, fl = fl, td = td),
-                  Some(SupertrendPoint(user, st.openDay,
-                    fu.toDouble / 100000000.0, fl.toDouble / 100000000.0, td,
-                    (if (td == 1L) fl else fu).toDouble / 100000000.0)))
-              }
-            }
-            val out = Seq.newBuilder[SupertrendPoint]
-            var st = state.getOption.getOrElse(SupertrendState(
-              null, null, 0L, 0L, 0L, 0L, hasPrev = false,
-              atrSeeded = false, 0L, Seq.empty,
-              stSeeded = false, 0L, 0L, 0L))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                point.foreach(out += _)
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              } else if (day == st.openDay) {
-                st = st.copy(openH = math.max(st.openH, c),
-                  openL = math.min(st.openL, c))
-                if (okey(t) > st.openOkey)
-                  st = st.copy(openOkey = okey(t), openClose = c)
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
+            val pc = st.prevClose * 1000000L // yesterday's close
+            val fuT = if (bu < st.fu || pc > st.fu) bu else st.fu
+            val flT = if (bl > st.fl || pc < st.fl) bl else st.fl
+            (fuT, flT,
+              if (cu > fuT) 1L else if (cu < flT) -1L else st.td)
           }
+        (base.copy(stSeeded = true, fu = fu, fl = fl, td = td),
+          Some(SupertrendPoint(user, bar.day,
+            fu.toDouble / 100000000.0, fl.toDouble / 100000000.0, td,
+            (if (td == 1L) fl else fu).toDouble / 100000000.0)))
       }
+    }
   }
 
   case class DonchianPoint(user_id: Long, day: String, upper_band: Double,
@@ -1403,188 +1299,73 @@ object StreamingRollups {
   // NOT private (the SessionState encoder contract). hs/ls hold the
   // last ≤n COMPLETED days' high/low cents, oldest first — the whole
   // rolling-channel state, bounded by the period, never tick volume.
-  case class DonchianState(openDay: String, openOkey: String,
-                           openH: Long, openL: Long, openClose: Long,
-                           hs: Seq[Long], ls: Seq[Long])
+  case class DonchianState(hs: Seq[Long], ls: Seq[Long])
 
   /** Streaming Donchian channels — the n-day rolling envelope as a
-    * BOUNDED deque of per-series state (n high/low cent pairs). The
-    * first tick of a new day finalizes the open one: yesterday's
-    * channel (the max/min over the deque BEFORE the push — partial
-    * frames included, exactly the batch lag(u) semantics) decides the
-    * breakout signal, the finalized bar joins the deque, and the day
-    * emits once the frame is full — bit-equal to the batch
-    * [[graft.operators.Finance.donchianChannels]] rows (integer
-    * compares, HALF_UP half-sum midline). Parity on every series day
-    * except its still-open last (spec-pinned).
+    * BOUNDED deque of per-series state (n high/low cent pairs). On
+    * each closed day, yesterday's channel (the max/min over the deque
+    * BEFORE the push — partial frames included, exactly the batch
+    * lag(u) semantics) decides the breakout signal, the finalized bar
+    * joins the deque, and the day emits once the frame is full —
+    * bit-equal to the batch [[graft.operators.Finance.donchianChannels]]
+    * rows (integer compares, HALF_UP half-sum midline). Parity on
+    * every series day except its still-open last (spec-pinned).
     */
   def donchianStream(ticks: Dataset[Tick], watermarkDelay: String, n: Int = 14,
                      idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[DonchianPoint] = {
-    import ticks.sparkSession.implicits._
     require(n >= 1, s"Donchian window must be >= 1, got $n")
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[DonchianState, DonchianPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[DonchianState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            def closeDay(st: DonchianState): (DonchianState, Option[DonchianPoint]) = {
-              // yesterday's channel: the deque BEFORE this bar joins
-              // (batch lag(u) — partial frames included)
-              val prev = if (st.hs.nonEmpty) Some((st.hs.max, st.ls.min)) else None
-              val hs = (st.hs :+ st.openH).takeRight(n)
-              val ls = (st.ls :+ st.openL).takeRight(n)
-              val point = prev.collect { case (pu, pl) if hs.size == n =>
-                val (u, lo) = (hs.max, ls.min)
-                DonchianPoint(user, st.openDay,
-                  u.toDouble / 100.0, lo.toDouble / 100.0,
-                  ((u + lo + 1) >> 1).toDouble / 100.0,
-                  if (st.openClose > pu) "breakout_up"
-                  else if (st.openClose < pl) "breakout_down" else "inside")
-              }
-              (st.copy(hs = hs, ls = ls), point)
-            }
-            val out = Seq.newBuilder[DonchianPoint]
-            var st = state.getOption.getOrElse(
-              DonchianState(null, null, 0L, 0L, 0L, Seq.empty, Seq.empty))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                point.foreach(out += _)
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              } else if (day == st.openDay) {
-                st = st.copy(openH = math.max(st.openH, c),
-                  openL = math.min(st.openL, c))
-                if (okey(t) > st.openOkey)
-                  st = st.copy(openOkey = okey(t), openClose = c)
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
+    dayClose(ticks, watermarkDelay, idleMs)(
+      _ => DonchianState(Seq.empty, Seq.empty)) { (user, st, bar) =>
+      // yesterday's channel: the deque BEFORE this bar joins
+      // (batch lag(u) — partial frames included)
+      val prev = if (st.hs.nonEmpty) Some((st.hs.max, st.ls.min)) else None
+      val hs = (st.hs :+ bar.high).takeRight(n)
+      val ls = (st.ls :+ bar.low).takeRight(n)
+      val point = prev.collect { case (pu, pl) if hs.size == n =>
+        val (u, lo) = (hs.max, ls.min)
+        DonchianPoint(user, bar.day,
+          u.toDouble / 100.0, lo.toDouble / 100.0,
+          ((u + lo + 1) >> 1).toDouble / 100.0,
+          if (bar.close > pu) "breakout_up"
+          else if (bar.close < pl) "breakout_down" else "inside")
       }
+      (DonchianState(hs, ls), point)
+    }
   }
 
   case class Mover(user_id: Long, day: String, prev_close_cents: Long,
                    close_cents: Long, change_bp: Long)
   // NOT private: the state encoder instantiates this from outside the
-  // package (the SessionState contract). lastFinal* = the most recent
-  // COMPLETED day's close; open* = the still-accumulating day.
-  case class MoverState(lastFinalDay: String, lastFinalClose: Long,
-                        openDay: String, openOkey: String, openClose: Long)
+  // package (the SessionState contract). prevClose = the most recent
+  // COMPLETED day's close, 0 before one exists (no emission either way).
+  case class MoverState(prevClose: Long)
 
   /** Streaming day-over-day MOVERS — the incremental form of the batch
     * [[graft.operators.Finance.topMovers]] change table: per-series
-    * state holds two scalars' worth of day info (the last completed
-    * close and the open day's running close), and the first tick of a
-    * NEW day finalizes the open one, emitting its close-to-close
-    * change in signed integer basis points via the positive-operand
-    * HALF_UP identity — bit-equal to the batch column. The still-open
-    * final day emits nothing (it isn't over), so batch parity holds on
-    * every series' days EXCEPT its last (parity spec pins exactly
-    * that). Intra-batch disorder is sorted away per group; a tick for
-    * an already-finalized day (late beyond the day boundary) is
-    * dropped — the [[transitions]] staleness trade, bounded by the
-    * upstream watermark. Ranking the emitted rows (the live top-k
-    * board) is a downstream windowed aggregate over this bounded
-    * stream.
+    * state holds the last completed close, and each closed day emits
+    * its close-to-close change in signed integer basis points via the
+    * positive-operand HALF_UP identity — bit-equal to the batch
+    * column. The still-open final day emits nothing (it isn't over),
+    * so batch parity holds on every series' days EXCEPT its last
+    * (parity spec pins exactly that). Ranking the emitted rows (the
+    * live top-k board) is a downstream windowed aggregate over this
+    * bounded stream.
     */
   def movers(ticks: Dataset[Tick], watermarkDelay: String,
-             idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[Mover] = {
-    import ticks.sparkSession.implicits._
-    val dayFmt = "yyyy-MM-dd"
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[MoverState, Mover](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[MoverState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat(dayFmt)
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            // full microsecond precision (getTime truncates to ms; the
-            // sub-ms part lives in getNanos) — must match the batch
-            // unix_micros order or same-ms closes could disagree
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            // mirrors the batch lpad(event_id, 12, '0') key, which
-            // ASSUMES ids fit 12 digits (lpad would truncate, %012d
-            // would widen — both silently misorder): fail loudly at
-            // the boundary instead of diverging from batch parity
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            val out = Seq.newBuilder[Mover]
-            var st = state.getOption.getOrElse(MoverState(null, 0L, null, null, 0L))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t), openClose = cents(t.value))
-              else if (day > st.openDay) {
-                // the open day is final: emit its change vs the last
-                // completed day, then roll the state forward
-                if (st.lastFinalDay != null && st.lastFinalClose > 0 && st.openClose > 0) {
-                  val p = st.lastFinalClose; val c = st.openClose
-                  out += Mover(user, st.openDay, p, c,
-                    (2 * c * 10000 + p) / (2 * p) - 10000)
-                }
-                st = MoverState(st.openDay, st.openClose,
-                  day, okey(t), cents(t.value))
-              } else if (day == st.openDay && okey(t) > st.openOkey)
-                st = st.copy(openOkey = okey(t), openClose = cents(t.value))
-              // day < openDay: late past the day boundary — dropped
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
-  }
+             idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[Mover] =
+    dayClose(ticks, watermarkDelay, idleMs)(_ => MoverState(0L)) { (user, st, bar) =>
+      val (p, c) = (st.prevClose, bar.close)
+      (MoverState(c),
+        if (p > 0 && c > 0) Some(Mover(user, bar.day, p, c, (2 * c * 10000 + p) / (2 * p) - 10000))
+        else None)
+    }
 
   case class HeikinAshiPoint(user_id: Long, day: String, ha_open: Double,
                              ha_high: Double, ha_low: Double, ha_close: Double)
   // NOT private (the SessionState encoder contract). The candle
   // recursion's whole carried state is TWO quarter-cent longs (the
-  // previous bar's ha_open4/ha_close4); openO/openOkeyMin track the
-  // day's FIRST tick (the one leg the other streaming indicators
-  // don't need) alongside the usual running H/L/close.
-  case class HeikinAshiState(openDay: String, openOkey: String,
-                             openOkeyMin: String, openO: Long,
-                             openH: Long, openL: Long, openClose: Long,
-                             haSeeded: Boolean, hao4: Long, hc4: Long)
+  // previous bar's ha_open4/ha_close4).
+  case class HeikinAshiState(haSeeded: Boolean, hao4: Long, hc4: Long)
 
   /** Streaming Heikin-Ashi — the smoothed-candle recursion
     * ([[graft.operators.Finance.heikinAshi]]) as TWO quarter-cent
@@ -1593,82 +1374,26 @@ object StreamingRollups {
     * ha_close4 + 1) div 2 is the same positive HALF_UP halving as
     * the batch fold, and high/low are integer max/min — every
     * finalized day bit-equal to the batch candle (parity on all days
-    * except the still-open last, spec-pinned). The open leg needs the
-    * day's FIRST tick: the state tracks a MIN order key next to the
-    * usual max, so cross-batch disorder inside a day still lands on
-    * the batch min_by/max_by bars.
+    * except the still-open last, spec-pinned). The open leg is the
+    * bar's min-order-key tick, so cross-batch disorder inside a day
+    * still lands on the batch min_by/max_by bars. Every closed day
+    * emits (the batch operator emits from the first bar).
     */
   def heikinAshiStream(ticks: Dataset[Tick], watermarkDelay: String,
-                       idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[HeikinAshiPoint] = {
-    import ticks.sparkSession.implicits._
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[HeikinAshiState, HeikinAshiPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[HeikinAshiState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: one candle step, ALWAYS emits
-            // (the batch operator emits from the first bar)
-            def closeDay(st: HeikinAshiState): (HeikinAshiState, HeikinAshiPoint) = {
-              val hc4 = st.openO + st.openH + st.openL + st.openClose
-              val hao4 =
-                if (!st.haSeeded) 2 * (st.openO + st.openClose)
-                else (st.hao4 + st.hc4 + 1) / 2
-              (st.copy(haSeeded = true, hao4 = hao4, hc4 = hc4),
-                HeikinAshiPoint(user, st.openDay,
-                  hao4.toDouble / 400.0,
-                  math.max(st.openH * 4, math.max(hao4, hc4)).toDouble / 400.0,
-                  math.min(st.openL * 4, math.min(hao4, hc4)).toDouble / 400.0,
-                  hc4.toDouble / 400.0))
-            }
-            val out = Seq.newBuilder[HeikinAshiPoint]
-            var st = state.getOption.getOrElse(HeikinAshiState(
-              null, null, null, 0L, 0L, 0L, 0L, haSeeded = false, 0L, 0L))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t),
-                  openOkeyMin = okey(t), openO = c,
-                  openH = c, openL = c, openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                out += point
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openOkeyMin = okey(t), openO = c,
-                  openH = c, openL = c, openClose = c)
-              } else if (day == st.openDay) {
-                st = st.copy(openH = math.max(st.openH, c),
-                  openL = math.min(st.openL, c))
-                if (okey(t) > st.openOkey)
-                  st = st.copy(openOkey = okey(t), openClose = c)
-                if (okey(t) < st.openOkeyMin)
-                  st = st.copy(openOkeyMin = okey(t), openO = c)
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
-  }
+                       idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[HeikinAshiPoint] =
+    dayClose(ticks, watermarkDelay, idleMs)(
+      _ => HeikinAshiState(haSeeded = false, 0L, 0L)) { (user, st, bar) =>
+      val hc4 = bar.open + bar.high + bar.low + bar.close
+      val hao4 =
+        if (!st.haSeeded) 2 * (bar.open + bar.close)
+        else (st.hao4 + st.hc4 + 1) / 2
+      (HeikinAshiState(haSeeded = true, hao4, hc4),
+        Some(HeikinAshiPoint(user, bar.day,
+          hao4.toDouble / 400.0,
+          math.max(bar.high * 4, math.max(hao4, hc4)).toDouble / 400.0,
+          math.min(bar.low * 4, math.min(hao4, hc4)).toDouble / 400.0,
+          hc4.toDouble / 400.0)))
+    }
 
   case class AdxPoint(user_id: Long, day: String, di_plus_bp: Long,
                       di_minus_bp: Long, adx_bp: Long)
@@ -1677,9 +1402,7 @@ object StreamingRollups {
   // delta row, three ≤n seed buffers OR their seeded fold scalars
   // (wp/wn/wt, micro-cents), and the ADX stage's ≤n DX buffer OR its
   // seeded micro-bp fold (wa) — never tick volume, never day count.
-  case class AdxState(openDay: String, openOkey: String,
-                      openH: Long, openL: Long, openClose: Long,
-                      prevH: Long, prevL: Long, prevC: Long, hasPrev: Boolean,
+  case class AdxState(prevH: Long, prevL: Long, prevC: Long, hasPrev: Boolean,
                       dmSeeded: Boolean, wp: Long, wn: Long, wt: Long,
                       pdmBuf: Seq[Long], ndmBuf: Seq[Long], trBuf: Seq[Long],
                       adxSeeded: Boolean, wa: Long, dxBuf: Seq[Long])
@@ -1698,129 +1421,58 @@ object StreamingRollups {
     */
   def adxStream(ticks: Dataset[Tick], watermarkDelay: String, n: Int = 7,
                 idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[AdxPoint] = {
-    import ticks.sparkSession.implicits._
     require(n >= 2, s"ADX window must be >= 2, got $n")
-    def divHU(num: Long, den: Long): Long =
-      if (num >= 0) (2 * num + den) / (2 * den)
-      else -((2 * -num + den) / (2 * den))
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AdxState, AdxPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[AdxState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    dayClose(ticks, watermarkDelay, idleMs)(_ => AdxState(
+      0L, 0L, 0L, hasPrev = false, dmSeeded = false, 0L, 0L, 0L,
+      Seq.empty, Seq.empty, Seq.empty, adxSeeded = false, 0L, Seq.empty)) {
+      (user, st, bar) =>
+        val base = st.copy(prevH = bar.high, prevL = bar.low, prevC = bar.close,
+          hasPrev = true)
+        // the first bar only becomes yesterday's bar; every later one
+        // is one delta row through the four folds
+        if (!st.hasPrev) (base, None)
+        else {
+          val up = bar.high - st.prevH
+          val dn = st.prevL - bar.low
+          val pdm = (if (up > dn && up > 0L) up else 0L) * 1000000L
+          val ndm = (if (dn > up && dn > 0L) dn else 0L) * 1000000L
+          val tr = trueRange(bar, hasPrev = true, st.prevC)
+          // stage 1-3: the three DM/TR folds fill their seed buffers
+          // in step, so they seed on the same bar
+          val (dmSeeded, wp, pb) = wilder(st.dmSeeded, st.wp, st.pdmBuf, pdm, n)
+          val (_, wn, nb) = wilder(st.dmSeeded, st.wn, st.ndmBuf, ndm, n)
+          val (_, wt, tb) = wilder(st.dmSeeded, st.wt, st.trBuf, tr, n)
+          val mid = base.copy(dmSeeded = dmSeeded, wp = wp, wn = wn, wt = wt,
+            pdmBuf = pb, ndmBuf = nb, trBuf = tb)
+          if (!dmSeeded) (mid, None)
           else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: if a previous bar exists this is
-            // one delta row through the four folds
-            def closeDay(st: AdxState): (AdxState, Option[AdxPoint]) = {
-              if (!st.hasPrev)
-                return (st.copy(prevH = st.openH, prevL = st.openL,
-                  prevC = st.openClose, hasPrev = true), None)
-              val up = st.openH - st.prevH
-              val dn = st.prevL - st.openL
-              val pdm = (if (up > dn && up > 0L) up else 0L) * 1000000L
-              val ndm = (if (dn > up && dn > 0L) dn else 0L) * 1000000L
-              val tr = math.max(st.openH - st.openL,
-                math.max(math.abs(st.openH - st.prevC),
-                  math.abs(st.openL - st.prevC))) * 1000000L
-              val base = st.copy(prevH = st.openH, prevL = st.openL,
-                prevC = st.openClose)
-              // stage 1-3: the three DM/TR folds share a seed phase
-              val (dmSeeded, wp, wn, wt, pb, nb, tb) =
-                if (st.dmSeeded)
-                  (true, divHU(st.wp * (n - 1) + pdm, n),
-                    divHU(st.wn * (n - 1) + ndm, n),
-                    divHU(st.wt * (n - 1) + tr, n),
-                    Seq.empty[Long], Seq.empty[Long], Seq.empty[Long])
-                else {
-                  val (p, d, t) = (st.pdmBuf :+ pdm, st.ndmBuf :+ ndm, st.trBuf :+ tr)
-                  if (p.size == n)
-                    (true, divHU(p.sum, n), divHU(d.sum, n), divHU(t.sum, n),
-                      Seq.empty[Long], Seq.empty[Long], Seq.empty[Long])
-                  else (false, 0L, 0L, 0L, p, d, t)
-                }
-              val mid = base.copy(dmSeeded = dmSeeded, wp = wp, wn = wn, wt = wt,
-                pdmBuf = pb, ndmBuf = nb, trBuf = tb)
-              if (!dmSeeded) (mid, None)
-              else {
-                // DI± / DX off the just-updated folds (flat bar → 0)
-                val dip = if (wt == 0L) 0L else (2 * wp * 10000 + wt) / (2 * wt)
-                val dim = if (wt == 0L) 0L else (2 * wn * 10000 + wt) / (2 * wt)
-                val dx = if (dip + dim == 0L) 0L
-                  else (2 * math.abs(dip - dim) * 10000 + (dip + dim)) /
-                    (2 * (dip + dim))
-                val dxu = dx * 1000000L
-                // stage 4: the ADX fold over DX in micro-bp
-                val (adxSeeded, wa, db) =
-                  if (st.adxSeeded) (true, divHU(st.wa * (n - 1) + dxu, n), Seq.empty[Long])
-                  else {
-                    val b = st.dxBuf :+ dxu
-                    if (b.size == n) (true, divHU(b.sum, n), Seq.empty[Long])
-                    else (false, 0L, b)
-                  }
-                val next = mid.copy(adxSeeded = adxSeeded, wa = wa, dxBuf = db)
-                val point = if (adxSeeded) Some(AdxPoint(user, st.openDay,
-                  dip, dim, (2 * wa + 1000000) / 2000000)) else None
-                (next, point)
-              }
-            }
-            val out = Seq.newBuilder[AdxPoint]
-            var st = state.getOption.getOrElse(AdxState(
-              null, null, 0L, 0L, 0L, 0L, 0L, 0L, hasPrev = false,
-              dmSeeded = false, 0L, 0L, 0L, Seq.empty, Seq.empty, Seq.empty,
-              adxSeeded = false, 0L, Seq.empty))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                point.foreach(out += _)
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openH = c, openL = c, openClose = c)
-              } else if (day == st.openDay) {
-                st = st.copy(openH = math.max(st.openH, c),
-                  openL = math.min(st.openL, c))
-                if (okey(t) > st.openOkey)
-                  st = st.copy(openOkey = okey(t), openClose = c)
-              }
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
+            // DI± / DX off the just-updated folds (flat bar → 0)
+            val dip = if (wt == 0L) 0L else (2 * wp * 10000 + wt) / (2 * wt)
+            val dim = if (wt == 0L) 0L else (2 * wn * 10000 + wt) / (2 * wt)
+            val dx = if (dip + dim == 0L) 0L
+              else (2 * math.abs(dip - dim) * 10000 + (dip + dim)) /
+                (2 * (dip + dim))
+            // stage 4: the ADX fold over DX in micro-bp
+            val (adxSeeded, wa, db) = wilder(st.adxSeeded, st.wa, st.dxBuf,
+              dx * 1000000L, n)
+            (mid.copy(adxSeeded = adxSeeded, wa = wa, dxBuf = db),
+              if (adxSeeded) Some(AdxPoint(user, bar.day,
+                dip, dim, (2 * wa + 1000000) / 2000000)) else None)
           }
-      }
+        }
+    }
   }
 
   case class CusumPoint(user_id: Long, day: String, target: Double,
                         s_pos: Long, s_neg: Long, alarm: Boolean)
   // NOT private (the SessionState encoder contract). The whole
-  // two-sided CUSUM recursion is the open-bar scalars plus TWO longs
-  // (S⁺, S⁻) and the per-series calibration pair — state that never
-  // grows with tick volume; the alarm bit is derived at emission.
-  case class CusumState(openDay: String, openOkey: String, openClose: Long,
-                        mu: Long, mad: Long, sp: Long, sn: Long)
+  // two-sided CUSUM recursion is TWO longs (S⁺, S⁻) plus the
+  // per-series calibration pair — state that never grows with tick
+  // volume; the alarm bit is derived at emission.
+  case class CusumState(mu: Long, mad: Long, sp: Long, sn: Long)
   // the stream-static join row: a tick carrying its series' calibration
   case class CalibTick(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
-                       value: Double, mu: Long, mad: Long)
+                       value: Double, mu: Long, mad: Long) extends DayTick
 
   /** Streaming two-sided CUSUM changepoint monitor — the batch
     * recursion ([[graft.operators.TimeSeries.cusumChangepoint]]) as
@@ -1835,87 +1487,43 @@ object StreamingRollups {
     * (|series| rows) table [[graft.operators.TimeSeries.cusumCalibration]]
     * produces and joins it in as a broadcast stream-static join — the
     * standard deploy loop (recalibrate offline on the bar table, the
-    * live monitor picks up the new targets on restart). Given the same
+    * live monitor picks up the new targets on restart). The fold state
+    * takes μ and MAD from the series' first joined tick. Given the same
     * calibration, every finalized day's (S⁺, S⁻, alarm) is bit-equal
     * to the batch fold — the same BIGINT recursion with the same
     * HALF_UP slack k = (2·MAD+2) div 4 and threshold h = 5·MAD —
     * parity on every series day except its still-open last
     * (spec-pinned). Series absent from the calibration table (under 2
     * bars at calibration time — exactly the batch m ≥ 2 filter) drop
-    * via the inner join, matching the batch output domain.
+    * via the inner join, matching the batch output domain; the
+    * watermark is taken over the joined ticks, so such a series does
+    * not advance it either.
     */
   def cusumStream(ticks: Dataset[Tick], calibration: DataFrame,
                   watermarkDelay: String,
                   idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[CusumPoint] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .join(broadcast(calibration.select("user_id", "mu", "mad")), Seq("user_id"))
-      .as[CalibTick]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[CalibTick], state: GroupState[CusumState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: CalibTick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: CalibTick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: one CUSUM step off the day close
-            def closeDay(st: CusumState): (CusumState, CusumPoint) = {
-              val k = (2 * st.mad + 2) / 4 // HALF_UP(MAD/2), mad ≥ 0
-              val h = 5 * st.mad
-              val sp = math.max(0L, st.sp + (st.openClose - st.mu - k))
-              val sn = math.max(0L, st.sn + (st.mu - st.openClose - k))
-              (st.copy(sp = sp, sn = sn),
-                CusumPoint(user, st.openDay, st.mu.toDouble / 100.0,
-                  sp, sn, sp > h || sn > h))
-            }
-            val out = Seq.newBuilder[CusumPoint]
-            var st: CusumState = null
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st == null) st = state.getOption.getOrElse(
-                CusumState(null, null, 0L, t.mu, t.mad, 0L, 0L))
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t), openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                out += point
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openClose = c)
-              } else if (day == st.openDay && okey(t) > st.openOkey)
-                st = st.copy(openOkey = okey(t), openClose = c)
-            }
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutTimestamp(
-                math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            }
-            out.result().iterator
-          }
-      }
+    dayClose(
+      ticks.join(broadcast(calibration.select("user_id", "mu", "mad")), Seq("user_id"))
+        .as[CalibTick],
+      watermarkDelay, idleMs)(t => CusumState(t.mu, t.mad, 0L, 0L)) { (user, st, bar) =>
+      // one CUSUM step off the day close
+      val k = (2 * st.mad + 2) / 4 // HALF_UP(MAD/2), mad ≥ 0
+      val h = 5 * st.mad
+      val sp = math.max(0L, st.sp + (bar.close - st.mu - k))
+      val sn = math.max(0L, st.sn + (st.mu - bar.close - k))
+      (st.copy(sp = sp, sn = sn),
+        Some(CusumPoint(user, bar.day, st.mu.toDouble / 100.0,
+          sp, sn, sp > h || sn > h)))
+    }
   }
 
   case class HoltPoint(user_id: Long, day: String, level: Double,
                        trend: Double, forecast: Double)
   // NOT private (the SessionState encoder contract). The whole Holt
-  // recursion is the open-bar scalars plus TWO longs of smoothing
-  // state — level l and forecast f = l + b in micro-cents.
-  case class HoltState(openDay: String, openOkey: String, openClose: Long,
-                       seeded: Boolean, l: Long, f: Long)
+  // recursion is TWO longs of smoothing state — level l and forecast
+  // f = l + b in micro-cents.
+  case class HoltState(seeded: Boolean, l: Long, f: Long)
 
   /** Streaming Holt linear forecast — the batch α = β = 1/2 halving
     * recursion ([[graft.operators.TimeSeries.holtLinear]]) as two
@@ -1930,82 +1538,33 @@ object StreamingRollups {
     * indicator streams.
     */
   def holtStream(ticks: Dataset[Tick], watermarkDelay: String,
-                 idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[HoltPoint] = {
-    import ticks.sparkSession.implicits._
-    def halfHU(n: Long): Long = if (n >= 0) (n + 1) / 2 else -((-n + 1) / 2)
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[HoltState, HoltPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[HoltState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: seed or one halving step
-            def closeDay(st: HoltState): (HoltState, HoltPoint) = {
-              val x = st.openClose * 1000000L
-              val (l, f) =
-                if (!st.seeded) (x, x)
-                else {
-                  val lt = halfHU(x + st.f)
-                  val bt = halfHU(st.f + lt - 2 * st.l)
-                  (lt, lt + bt)
-                }
-              (st.copy(seeded = true, l = l, f = f),
-                HoltPoint(user, st.openDay,
-                  l.toDouble / 100000000.0,
-                  (f - l).toDouble / 100000000.0,
-                  f.toDouble / 100000000.0))
-            }
-            val out = Seq.newBuilder[HoltPoint]
-            var st = state.getOption.getOrElse(
-              HoltState(null, null, 0L, seeded = false, 0L, 0L))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t), openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                out += point
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openClose = c)
-              } else if (day == st.openDay && okey(t) > st.openOkey)
-                st = st.copy(openOkey = okey(t), openClose = c)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
-  }
+                 idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[HoltPoint] =
+    dayClose(ticks, watermarkDelay, idleMs)(
+      _ => HoltState(seeded = false, 0L, 0L)) { (user, st, bar) =>
+      // seed or one halving step
+      val x = bar.close * 1000000L
+      val (l, f) =
+        if (!st.seeded) (x, x)
+        else {
+          val lt = halfHU(x + st.f)
+          val bt = halfHU(st.f + lt - 2 * st.l)
+          (lt, lt + bt)
+        }
+      (HoltState(seeded = true, l, f),
+        Some(HoltPoint(user, bar.day,
+          l.toDouble / 100000000.0,
+          (f - l).toDouble / 100000000.0,
+          f.toDouble / 100000000.0)))
+    }
 
   case class HoltWintersPoint(user_id: Long, day: String, level: Double,
                               trend: Double, seasonal: Double,
                               forecast: Double)
   // NOT private (the SessionState encoder contract). Holt–Winters
-  // state = the open-bar scalars + the ≤7-close warm-up buffer + the
-  // (l, b) smoothing pair + the 7-element seasonal ring, all in
-  // micro-cents.
-  case class HoltWintersState(openDay: String, openOkey: String,
-                              openClose: Long, warm: Seq[Long],
-                              seeded: Boolean, l: Long, b: Long,
-                              seas: Seq[Long])
+  // state = the ≤7-close warm-up buffer + the (l, b) smoothing pair +
+  // the 7-element seasonal ring, all in micro-cents.
+  case class HoltWintersState(warm: Seq[Long], seeded: Boolean, l: Long,
+                              b: Long, seas: Seq[Long])
 
   /** Streaming Holt–Winters additive weekly forecast — the batch
     * α = β = γ = 1/2 recursion
@@ -2022,79 +1581,31 @@ object StreamingRollups {
     * the streaming-native seasonal forecaster next to [[holtStream]].
     */
   def holtWintersStream(ticks: Dataset[Tick], watermarkDelay: String,
-                        idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[HoltWintersPoint] = {
-    import ticks.sparkSession.implicits._
-    def halfHU(n: Long): Long = if (n >= 0) (n + 1) / 2 else -((-n + 1) / 2)
-    ticks
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[HoltWintersState, HoltWintersPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[Tick], state: GroupState[HoltWintersState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            def micros(t: Tick) =
-              t.ts.getTime / 1000 * 1000000L + t.ts.getNanos / 1000
-            def okey(t: Tick) = {
-              require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
-              f"${micros(t)}%020d${t.event_id}%012d"
-            }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            // finalize the open day: warm-up, seed, or one HW step
-            def closeDay(st: HoltWintersState): (HoltWintersState, Option[HoltWintersPoint]) = {
-              val x = st.openClose * 1000000L
-              if (!st.seeded) {
-                val warm = st.warm :+ x
-                if (warm.length < 7) (st.copy(warm = warm), None)
-                else {
-                  val l0 = (2 * warm.sum + 7) / 14
-                  (st.copy(warm = Seq.empty, seeded = true, l = l0, b = 0L,
-                    seas = warm.map(_ - l0)), None)
-                }
-              } else {
-                val sm = st.seas.head
-                val lt = halfHU(x - sm + st.l + st.b)
-                val bt = halfHU(st.b + lt - st.l)
-                val sNew = halfHU(x - lt + sm)
-                val seas = st.seas.tail :+ sNew
-                val f = lt + bt + seas.head
-                (st.copy(l = lt, b = bt, seas = seas),
-                  Some(HoltWintersPoint(user, st.openDay,
-                    lt.toDouble / 100000000.0,
-                    bt.toDouble / 100000000.0,
-                    sNew.toDouble / 100000000.0,
-                    f.toDouble / 100000000.0)))
-              }
-            }
-            val out = Seq.newBuilder[HoltWintersPoint]
-            var st = state.getOption.getOrElse(
-              HoltWintersState(null, null, 0L, Seq.empty, seeded = false,
-                0L, 0L, Seq.empty))
-            var lastTs = 0L
-            rows.toSeq.sortBy(t => (micros(t), t.event_id)).foreach { t =>
-              val day = fmt.format(t.ts)
-              val c = cents(t.value)
-              lastTs = math.max(lastTs, t.ts.getTime)
-              if (st.openDay == null)
-                st = st.copy(openDay = day, openOkey = okey(t), openClose = c)
-              else if (day > st.openDay) {
-                val (advanced, point) = closeDay(st)
-                point.foreach(out += _)
-                st = advanced.copy(openDay = day, openOkey = okey(t),
-                  openClose = c)
-              } else if (day == st.openDay && okey(t) > st.openOkey)
-                st = st.copy(openOkey = okey(t), openClose = c)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(lastTs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
+                        idleMs: Long = 7L * 24 * 3600 * 1000): Dataset[HoltWintersPoint] =
+    dayClose(ticks, watermarkDelay, idleMs)(_ => HoltWintersState(
+      Seq.empty, seeded = false, 0L, 0L, Seq.empty)) { (user, st, bar) =>
+      // warm-up, seed, or one HW step
+      val x = bar.close * 1000000L
+      if (!st.seeded) {
+        val warm = st.warm :+ x
+        if (warm.length < 7) (st.copy(warm = warm), None)
+        else {
+          val l0 = (2 * warm.sum + 7) / 14
+          (HoltWintersState(Seq.empty, seeded = true, l0, 0L, warm.map(_ - l0)), None)
+        }
+      } else {
+        val sm = st.seas.head
+        val lt = halfHU(x - sm + st.l + st.b)
+        val bt = halfHU(st.b + lt - st.l)
+        val sNew = halfHU(x - lt + sm)
+        val seas = st.seas.tail :+ sNew
+        val f = lt + bt + seas.head
+        (st.copy(l = lt, b = bt, seas = seas),
+          Some(HoltWintersPoint(user, bar.day,
+            lt.toDouble / 100000000.0,
+            bt.toDouble / 100000000.0,
+            sNew.toDouble / 100000000.0,
+            f.toDouble / 100000000.0)))
       }
-  }
+    }
 }

@@ -142,11 +142,9 @@ class OperatorsSpec extends SparkSpec {
     val docs = (1L to 60L).toDF("doc_id")
     val viaDriver = Dedup.clusterPairs(pairs, docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
-    spark.conf.set("graft.cluster.driverEdgeMax", "0") // force distributed
-    val viaDistributed =
-      try Dedup.clusterPairs(pairs, docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
-      finally spark.conf.unset("graft.cluster.driverEdgeMax")
+    val viaDistributed = Dedup.clusterPairsWith(pairs, docs, maxIter = 8,
+      maxDriverEdges = 0L).collect() // gate 0: force distributed
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
     assert(viaDriver.toSeq === viaDistributed.toSeq)
     val byId = viaDriver.map(t => t._1 -> t._2).toMap
     (1L to 20L).foreach(d => assert(byId(d) === 1L))

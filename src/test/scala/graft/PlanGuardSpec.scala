@@ -364,6 +364,30 @@ class PlanGuardSpec extends SparkSpec {
       s"awaitTermination outside streamOnce at SparkEntry.scala lines ${awaits.filterNot(_._2).map(_._1).mkString(", ")}")
   }
 
+  test("one day-close driver: one order-key check, flatMapGroupsWithState in four members") {
+    // The eleven indicator streams run on StreamingRollups.dayClose; a
+    // stream that forks its own day-close loop brings back a copy of the
+    // order-key require and a flatMapGroupsWithState call of its own.
+    val src = sourceLines(java.nio.file.Paths.get("src/main/scala"))
+    val checks = src.collect {
+      case (f, n, c) if c.contains("12-digit order-key domain") => s"$f:$n"
+    }
+    assert(checks.size === 1, s"order-key domain check at: ${checks.mkString(", ")}")
+    // a call's owner is the nearest member `def` above it in its file
+    val member = """^  (?:private )?def (\w+)""".r
+    val owners = src.zipWithIndex.collect {
+      case ((f, n, c), i) if c.contains("flatMapGroupsWithState[") =>
+        val owner = src.take(i).reverseIterator.filter(_._1 == f)
+          .flatMap(l => member.findFirstMatchIn(l._3)).map(_.group(1))
+          .nextOption().getOrElse("?")
+        s"$f:$owner"
+    }
+    val allowed = Seq("dayClose", "sessionize", "sessionizeEventTime", "transitions")
+      .map(m => s"graft/streaming/StreamingRollups.scala:$m")
+    assert(owners.sorted === allowed.sorted,
+      s"flatMapGroupsWithState outside the day-close driver and the sessionizers: $owners")
+  }
+
   test("gate artifacts build once: no ensureDir rewrite, no ensureTable stream restart") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.streaming.StreamingQueryListener

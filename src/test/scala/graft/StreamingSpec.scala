@@ -692,10 +692,148 @@ class StreamingSpec extends SparkSpec {
       s"timeout-flush/resume emissions: $got")
   }
 
+  test("day-close driver: HA and CUSUM parity holds with bars spanning three micro-batches") {
+    // the parity specs replay their data as ONE batch, so the driver's
+    // state is never read back; here the same rows arrive as three
+    // Trigger.Once batches on one checkpoint. The first cut splits day
+    // d1 by event_id parity, so a later batch brings ticks that precede
+    // ones already folded into the open bar (the open leg moves across
+    // batches); the second cuts day d2 at noon. The watermark delay
+    // covers the within-day disorder and idleMs the whole span, so no
+    // tick is late and no state times out.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamingRollups.Tick
+    val ev = sources.Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+    val rows = ev.as[Tick].collect().toSeq.sortBy(t => (t.ts.getTime, t.event_id))
+    def day(t: Tick) = t.ts.toInstant.toString.take(10) // UTC yyyy-MM-dd
+    val d1 = day(rows(rows.size / 3))
+    val d2 = day(rows(2 * rows.size / 3))
+    assert(d1 < d2, s"cut days collapse: $d1 $d2")
+    def batchOf(t: Tick): Int =
+      if (day(t) < d1 || (day(t) == d1 && t.event_id % 2 == 1)) 0
+      else if (day(t) < d2 || (day(t) == d2 && t.ts.toInstant.toString.substring(11, 13) < "12")) 1
+      else 2
+    val batches = rows.groupBy(batchOf)
+    // the split must move some series' open leg backwards across batches
+    val d1Ticks = rows.filter(day(_) == d1).groupBy(t => (t.user_id, batchOf(t)))
+    assert(rows.map(_.user_id).distinct.exists { u =>
+      (d1Ticks.get((u, 0)), d1Ticks.get((u, 1))) match {
+        case (Some(a), Some(b)) => b.head.ts.before(a.head.ts)
+        case _ => false
+      }
+    }, s"no series has a day-$d1 tick in batch 2 earlier than its batch-1 ticks")
+    val idleMs = 365L * 24 * 3600 * 1000
+    def replay(name: String, stream: org.apache.spark.sql.Dataset[Tick] =>
+        org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.DataFrame = {
+      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${name}_ckpt").toString
+      val out = java.nio.file.Files.createTempDirectory(s"graft_${name}_out").toString
+      val input = MemoryStream[Tick]
+      (0 to 2).foreach { b =>
+        input.addData(batches.getOrElse(b, Seq.empty): _*)
+        val q = stream(input.toDS()).writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .outputMode("append").trigger(Trigger.Once()).start()
+        q.awaitTermination(120000)
+      }
+      spark.read.parquet(out)
+    }
+    val wAll = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    def closedDays(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("maxd", max(col("day")).over(wAll)).filter(col("day") < col("maxd"))
+
+    def haKeyed(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("day")) ->
+        ((r.getAs[Double]("ha_open"), r.getAs[Double]("ha_high"),
+          r.getAs[Double]("ha_low"), r.getAs[Double]("ha_close")))).toMap
+    val haStreamed = haKeyed(replay("ha3",
+      StreamingRollups.heikinAshiStream(_, "2 days", idleMs = idleMs)))
+    val haBatch = haKeyed(closedDays(operators.Finance.heikinAshi(ev))
+      .select("user_id", "day", "ha_open", "ha_high", "ha_low", "ha_close"))
+    assert(haStreamed === haBatch, "three-batch Heikin-Ashi parity")
+    assert(haStreamed.nonEmpty)
+
+    def cusumKeyed(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("day")) ->
+        ((r.getAs[Double]("target"), r.getAs[Long]("s_pos"),
+          r.getAs[Long]("s_neg"), r.getAs[Boolean]("alarm")))).toMap
+    val calib = operators.TimeSeries.cusumCalibration(ev)
+    val cuStreamed = cusumKeyed(replay("cusum3",
+      StreamingRollups.cusumStream(_, calib, "2 days", idleMs = idleMs)))
+    val cuBatch = cusumKeyed(closedDays(operators.TimeSeries.cusumChangepoint(ev))
+      .select("user_id", "day", "target", "s_pos", "s_neg", "alarm"))
+    assert(cuStreamed === cuBatch, "three-batch CUSUM parity")
+    assert(cuStreamed.values.exists(_._4) && cuStreamed.values.exists(!_._4),
+      "expected both alarm states across the parity corpus")
+  }
+
+  test("day-close driver: a late tick for a closed day emits nothing and changes no later day") {
+    // one tick a day, so each Heikin-Ashi candle is hand-checkable:
+    // Jan 1 = 1.00 → (1.0, 1.0, 1.0, 1.0); Jan 2 = 2.00 → ha_open4 =
+    // (400 + 400 + 1) div 2 = 400 → (1.0, 2.0, 1.0, 2.0); Jan 3 = 1.50
+    // → ha_open4 = (400 + 800 + 1) div 2 = 600 → (1.5, 1.5, 1.5, 1.5).
+    // The late Jan 1 tick passes the 3-day watermark, so the driver,
+    // not the engine, must drop it: folded anywhere, its 100.00 would
+    // move a candle.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamingRollups.Tick
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_late_ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_late_out").toString
+    val input = MemoryStream[Tick]
+    def runOnce(): Set[(String, (Double, Double, Double, Double))] = {
+      val q = StreamingRollups.heikinAshiStream(input.toDS(), "3 days")
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").trigger(Trigger.Once()).start()
+      q.awaitTermination(120000)
+      spark.read.parquet(out).collect().map(r => r.getAs[String]("day") ->
+        ((r.getAs[Double]("ha_open"), r.getAs[Double]("ha_high"),
+          r.getAs[Double]("ha_low"), r.getAs[Double]("ha_close")))).toSet
+    }
+    input.addData(
+      Tick(1L, 1L, ts("2024-01-01 00:00:00"), 1.0),
+      Tick(1L, 2L, ts("2024-01-02 00:00:00"), 2.0))
+    val first = runOnce() // Jan 1 closes
+    input.addData(Tick(1L, 99L, ts("2024-01-01 12:00:00"), 100.0))
+    val afterLate = runOnce() // late for the closed Jan 1
+    assert(afterLate === first, s"the late tick emitted: ${afterLate -- first}")
+    input.addData(
+      Tick(1L, 3L, ts("2024-01-03 00:00:00"), 1.5),
+      Tick(1L, 4L, ts("2024-01-04 00:00:00"), 3.0))
+    assert(runOnce() === Set(
+      "2024-01-01" -> ((1.0, 1.0, 1.0, 1.0)),
+      "2024-01-02" -> ((1.0, 2.0, 1.0, 2.0)),
+      "2024-01-03" -> ((1.5, 1.5, 1.5, 1.5))))
+  }
+
+  test("day-close driver: an event_id outside 12 digits fails the query") {
+    // the order key pads event_id to 12 digits; a wider id would
+    // misorder silently, so the data-contract require stops the query
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamingRollups.Tick
+    val input = MemoryStream[Tick]
+    input.addData(Tick(1L, 1000000000000L, ts("2024-01-01 00:00:00"), 1.0))
+    val q = StreamingRollups.movers(input.toDS(), "10 minutes")
+      .writeStream.format("memory").queryName("order_key_domain")
+      .outputMode("append").trigger(Trigger.Once()).start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.awaitTermination() finally q.stop()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(messages.exists(_.contains("12-digit order-key domain")), e.toString)
+  }
+
   test("streaming MACD reproduces the batch recursion for every closed day") {
-    // the EMA recursion as three doubles of state: every finalized
-    // day's (macd, signal, histogram) must be bit-equal to the batch
-    // fold's row; parity holds on all days except each series' last
+    // the EMA recursion as three micro-cent longs of state (signed
+    // HALF_UP steps): every finalized day's (macd, signal, histogram)
+    // must be bit-equal to the batch fold's row; parity holds on all
+    // days except each series' last
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StreamingRollups.Tick
