@@ -3,6 +3,12 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
 
+  /** Materializes every row and column of a query's result, as the
+    * benchmark harness does: a `.count()` would let Catalyst prune the
+    * root sort and every column it never reads. */
+  private def write(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   /** warm-ups + timed reps for one query; returns (median, min, noise, err). */
   private def timeOne(spark: SparkSession, sfDir: String,
                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -10,11 +16,11 @@ object Bench {
   : (Double, Double, Double, Option[String]) = {
     var err: Option[String] = None
     (1 to warmups).foreach { _ =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try write(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
     val samples = (1 to reps).map { _ =>
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).count()
+      try write(fn(spark, sfDir))
       catch { case e: Throwable =>
         if (err.isEmpty) err =
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}") }
@@ -47,7 +53,7 @@ object Bench {
     if (new java.io.File(warmDir).isDirectory) {
       SparkEntry.queries.foreach { case (name, fn) =>
         if (subset.isEmpty || subset(name))
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
+          try write(fn(spark, warmDir)) catch { case _: Throwable => () }
       }
     }
     // PRE-BUILD phase (round-10 interference bisect): every persisted

@@ -1180,12 +1180,13 @@ object SparkEntry {
     "rollup_yearly"   -> ((s, d) => Rollups.yearly(orderSeries(s, d))),
     "rollup_combined" -> ((s, d) => Rollups.combined(orderSeries(s, d))),
     "rollup_multi"    -> ((s, d) => Rollups.multiMetric(Tables.lineitem(s, d))),
+    // no root sort: like the reference's MongoDB loads, the etl_batch
+    // keys' rows have no order (PlanGuardSpec checks all 19)
     "schema_normalize" -> ((s, d) =>
       Tables.events(s, d).select(
         col("event_id"), col("user_id"),
         round(coalesce(nanvl(col("value").cast("double"), lit(0.0)), lit(0.0)), 2).as("value_clean"),
-        floor(col("value")).cast("long").as("value_floor"))
-        .orderBy("event_id")),
+        floor(col("value")).cast("long").as("value_floor"))),
     // — B. API surface —
     "api_companies"   -> ((s, d) => ApiSurface.companies(Tables.customer(s, d))),
     "api_agg_types"   -> ((s, d) => ApiSurface.aggTypes(Rollups.combined(orderSeries(s, d)), 1L)),
@@ -1202,7 +1203,7 @@ object SparkEntry {
     "api_paginate"    -> ((s, d) => ApiSurface.paginate(Tables.customer(s, d), page = 2, limit = 9)),
     "api_detail"      -> ((s, d) => ApiSurface.detail(Tables.part(s, d), 42L)),
     // — C. text pipeline —
-    "news_transform"  -> ((s, d) => TextPipeline.transform(Tables.documents(s, d)).orderBy("doc_id")),
+    "news_transform"  -> ((s, d) => TextPipeline.transform(Tables.documents(s, d))),
     // token-BUDGET truncation with the compiled BPE encoder (the
     // reference truncates by tokenizer.encode token count, not
     // whitespace words); merges pinned to the bpe_encode gate list so

@@ -27,7 +27,8 @@ object TextAnalysis {
   val DeStops: Seq[String] = Seq("der", "die", "das", "und", "ist", "ein", "zu")
 
   /** Stopword-profile language heuristic: argmax of per-language
-    * stopword hits, ties resolved en > es > de > unknown.
+    * stopword hits, ties resolved en > es > de > unknown. Rows come in
+    * no particular order; a caller that needs one sorts.
     */
   def langId(documents: DataFrame): DataFrame = {
     val en = countIn(col("text"), EnStops)
@@ -40,7 +41,6 @@ object TextAnalysis {
         .when(es >= de && es > 0, lit("es"))
         .when(de > 0, lit("de"))
         .otherwise(lit("unknown")).as("lang_pred"))
-      .orderBy("doc_id")
   }
 
   /** [[langId]] evaluated against the corpus' ground-truth labels —
@@ -156,6 +156,7 @@ object TextAnalysis {
   /** Quality features: length, word stats, punctuation ratio, stopword
     * ratio, and a bounded composite score — the standard pre-training
     * quality-filter feature set (length/punct/stopword heuristics).
+    * Rows come in no particular order; a caller that needs one sorts.
     */
   def qualityScore(documents: DataFrame): DataFrame = {
     val nChars = length(col("text")).cast("long")
@@ -172,7 +173,6 @@ object TextAnalysis {
       (ratioBp(nChars - wcount + 1, wcount).cast("double") / 10000.0)
         .as("avg_word_len"),
       qualityCol(col("text")).as("quality"))
-      .orderBy("doc_id")
   }
 
   /** The quality KEEP/DROP decision itself (the filter stage every
@@ -190,14 +190,14 @@ object TextAnalysis {
 
   /** Token counting: whitespace tokens + a BPE-ish regex segmentation
     * (letter runs / digit runs / single punctuation), the usual cheap
-    * proxy for subword token counts.
+    * proxy for subword token counts. Rows come in no particular order;
+    * a caller that needs one sorts.
     */
   def tokenCount(documents: DataFrame): DataFrame =
     documents.select(
       col("doc_id"),
       size(words(col("text"))).cast("long").as("ws_tokens"),
       regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).cast("long").as("bpe_tokens"))
-      .orderBy("doc_id")
 
   /** Text cleaning for training-data pipelines: strip markup tags,
     * drop control characters, collapse whitespace, trim. All
@@ -325,7 +325,8 @@ object TextAnalysis {
     * The synthetic customer table carries no PII-bearing columns, so
     * the profile string under test is CONSTRUCTED deterministically
     * from c_custkey (both engines build the identical string — the
-    * operator under test is the redaction, not the profile).
+    * operator under test is the redaction, not the profile). Rows come
+    * in no particular order; a caller that needs one sorts.
     */
   def piiScrub(customer: DataFrame): DataFrame = {
     val ck = col("c_custkey")
@@ -343,7 +344,6 @@ object TextAnalysis {
         regexp_replace(
           regexp_replace(col("profile"), lit(EmailPattern), lit("<EMAIL>")),
           lit(PhonePattern), lit("<PHONE>")).as("redacted"))
-      .orderBy("c_custkey")
   }
 
   /** Whitespace-normalized content fingerprint (md5). The dedup

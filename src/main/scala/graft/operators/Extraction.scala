@@ -19,6 +19,7 @@ object Extraction {
   /** Typed field extraction from a semi-structured payload column
     * (reference parse_xbrl + safe_get_key, idx_transformation_load_script.py:207-282).
     * events.props is a JSON string standing in for the XBRL instance.
+    * Rows come in no particular order; a caller that needs one sorts.
     */
   def kvExtract(events: DataFrame): DataFrame =
     events.select(
@@ -27,7 +28,6 @@ object Extraction {
       // coalesce-to-default on failed extraction, like the reference's
       // `coalesce(cast(...), lit(0.0))` (:407-440)
       coalesce(get_json_object(col("props"), "$.k").cast("long"), lit(0L)).as("k_value"))
-      .orderBy("event_id")
 
   /** Tag extraction from an XML-ish payload column (reference
     * parse_xbrl walks the XBRL instance tree,
@@ -63,7 +63,8 @@ object Extraction {
     * The payload is synthesized from event columns — nested elements,
     * an `idx:` namespace, attributes on both leaf and non-leaf
     * elements, mixed-case tag names — so the oracle can recompute the
-    * expected fields from the same base columns.
+    * expected fields from the same base columns. Rows come in no
+    * particular order; a caller that needs one sorts.
     */
   def kvExtractNested(events: DataFrame): DataFrame = {
     import graft.plans.XmlExprs
@@ -89,13 +90,13 @@ object Extraction {
       .withColumn("leverage_ratio",
         when(col("liabilities") =!= 0,
           round(col("revenue").cast("double") / col("liabilities"), 4)))
-      .orderBy("event_id")
   }
 
   /** XML-path variant of [[kvExtract]]: the payload is an XML-ish
     * document (the reference's actual XBRL shape) and fields come out
     * via [[xmlValue]]. The payload here is synthesized from event
-    * columns so the oracle can rebuild it byte-identically.
+    * columns so the oracle can rebuild it byte-identically. Rows come
+    * in no particular order; a caller that needs one sorts.
     */
   def kvExtractXml(events: DataFrame): DataFrame = {
     val payload = concat(
@@ -107,12 +108,13 @@ object Extraction {
       // regexp_extract yields '' on no match; '' casts to null only
       // outside ANSI mode, so nullif first (ANSI-safe)
       coalesce(nullif(xmlValue(payload, "k"), lit("")).cast("long"), lit(0L)).as("k_value"))
-      .orderBy("event_id")
   }
 
   /** Derived per-entity financial metrics with safe division
     * (reference debt_to_equity, idx_transformation_load_script.py:446-454):
     * ratio is NULL when the denominator is 0, never a crash or Inf.
+    * One row per customer, in no particular order; a caller that needs
+    * one sorts.
     */
   def financialMetrics(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     // Money columns are exact 2-decimal values; decimal arithmetic makes
@@ -133,7 +135,6 @@ object Extraction {
         round(sum(col("net") - col("discounted")), 2).cast("double").as("profit"))
       .withColumn("margin_ratio",
         when(col("revenue") =!= 0, round(col("profit") / col("revenue"), 4)))
-      .orderBy("o_custkey")
   }
 
   /** Indonesian Rupiah formatting (reference format_rupiah UDF,

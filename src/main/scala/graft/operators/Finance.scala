@@ -33,6 +33,12 @@ import org.apache.spark.sql.functions._
   */
 object Finance {
 
+  /** The packed-tick domain's error messages, shared with the stream
+    * day-close driver ([[graft.streaming.StreamingRollups]]). */
+  val MicrosDomain = "outside the [0, 10^16) packed-tick domain"
+  val OrderKeyDomain = "outside the 12-digit order-key domain"
+  val CentsDomain = "outside the |cents| < 500000000 tick domain"
+
   /** Composite time-order key: zero-padded epoch micros ‖ id. String
     * compare == (ts, id) compare; both engines build it byte-identically.
     */
@@ -62,10 +68,22 @@ object Finance {
   // close — unrepresentable in the corpus and the streaming schema).
   // The ORACLES keep their padded-string arg_max form (DuckDB's
   // min_by cannot order a struct); the output is identical.
-  private def packedTick(ts: Column, id: Column, cents: Column): Column =
-    (unix_micros(ts).cast("decimal(20,0)") * lit(1000000000000L) +
-      id.cast("long")) * lit(1000000000L) +
-      (cents.cast("long") + lit(500000000L))
+  // The three bounds are checked on every tick as it enters the
+  // aggregate (a row-local CASE that stays in codegen): out of domain,
+  // a lane would carry into its neighbour and yield a wrong open or
+  // close, so the query fails with a named error. The id and cents
+  // messages are the stream day-close driver's.
+  private def packedTick(ts: Column, id: Column, cents: Column): Column = {
+    val us = unix_micros(ts)
+    def fail(what: String, v: Column, domain: String) =
+      raise_error(concat(lit(s"$what "), v.cast("string"), lit(s" $domain")))
+    when(us < 0L || us >= 10000000000000000L, fail("tick micros", us, MicrosDomain))
+      .when(id < 0L || id >= 1000000000000L, fail("event_id", id, OrderKeyDomain))
+      .when(abs(cents) >= 500000000L, fail("cents", cents, CentsDomain))
+      .otherwise((us.cast("decimal(20,0)") * lit(1000000000000L) +
+        id.cast("long")) * lit(1000000000L) +
+        (cents.cast("long") + lit(500000000L)))
+  }
   private def unpackCents(pk: Column): Column =
     (pk % lit(1000000000L)).cast("long") - lit(500000000L)
   /** Cents of round(value, 2) — the exact integer basis every bar leg
@@ -85,6 +103,7 @@ object Finance {
     * that survives (a row_number window would sort every tick).
     * Reference analog: the daily grain its YFinance feed arrives at
     * (TransForm_Load_Yfinance.py:210-226 treats day bars as given).
+    * Bars come in no particular order; a caller that needs one sorts.
     */
   def ohlcResample(events: DataFrame): DataFrame = {
     events
@@ -101,7 +120,6 @@ object Finance {
           .cast("double") / 100.0).as("close"),
         count(lit(1)).as("n_obs"),
         sum(round(col("value"), 2).cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .orderBy("user_id", "period_key")
   }
 
   /** Weekly bars derived ALGEBRAICALLY from daily bars — the
@@ -714,14 +732,16 @@ object Finance {
     * recursion replays exactly in any engine. RSI in integer bp from
     * the integer averages (flat frame = 5000 by convention). Same
     * shapes as [[macd]]: one series-keyed exchange, per-series
-    * ordered-array fold, oracle replays with recursive CTEs.
+    * ordered-array fold, oracle replays with recursive CTEs. Rows come
+    * in no particular order; a caller that needs one sorts.
     */
   def rsiWilder(events: DataFrame, n: Int = 14): DataFrame =
     rsiWilderFromBars(dailyCloses(events), n)
 
   /** [[rsiWilder]] over the persisted bar table — zero-exchange
     * series-keyed fold (the [[rsiFromBars]] lifecycle; shared
-    * oracle with the direct form).
+    * oracle with the direct form). Rows come in no particular order;
+    * a caller that needs one sorts.
     */
   def rsiWilderFromBars(bars: DataFrame, n: Int = 14): DataFrame = {
     require(n >= 2, s"RSI window must be >= 2, got $n")
@@ -747,7 +767,6 @@ object Finance {
         expr("CASE WHEN col.wg + col.wl = 0L THEN 5000L " +
           "ELSE (2 * col.wg * 10000 + (col.wg + col.wl)) div (2 * (col.wg + col.wl)) END")
           .as("rsi_bp"))
-      .orderBy("user_id", "day")
   }
 
   /** Signed HALF_UP integer division identity, as a SQL fragment over

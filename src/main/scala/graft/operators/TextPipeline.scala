@@ -21,7 +21,8 @@ object TextPipeline {
   val SummaryTokens = 24 // reference summary max_length analog (:129)
 
   /** Transform stage (transform_iqplus_news_dags.py:96-154): truncate,
-    * "summarize", derive category, count words.
+    * "summarize", derive category, count words. Rows come in no
+    * particular order; a caller that needs one sorts.
     */
   def transform(documents: DataFrame): DataFrame = {
     val content = substring(col("text"), 1, CharLimit)
@@ -63,7 +64,8 @@ object TextPipeline {
     * of the corpus into words. Word token counts are ≥1 (words are
     * nonempty after normalization), so the running sum is strictly
     * increasing and "first overflow stops" ≡ "keep while cumulative ≤
-    * budget" — the property the SQL window replay relies on.
+    * budget" — the property the SQL window replay relies on. Rows come
+    * in no particular order; a caller that needs one sorts.
     */
   def transformBpe(documents: DataFrame, merges: Seq[(String, String)],
                    tokenBudget: Int = TokenLimit): DataFrame = {
@@ -93,12 +95,12 @@ object TextPipeline {
         aggregate(col("tc"), lit(0L), (a, c) => a + c).as("n_tokens_full"),
         (aggregate(col("tc"), lit(0L), (a, c) => a + c) > tokenBudget).as("truncated"),
         col("category"), col("lang"))
-      .orderBy("doc_id")
   }
 
   /** First-occurrence dedup by "title" (leading words), reference
     * `find_one({"judul": title})` insert guard (:144,156). Window
-    * row_number keeps the earliest doc per title in one shuffle.
+    * row_number keeps the earliest doc per title in one shuffle. Rows
+    * come in no particular order; a caller that needs one sorts.
     */
   def dedupByTitle(documents: DataFrame, titleWords: Int): DataFrame = {
     val title = concat_ws(" ", slice(split(col("text"), " "), 1, titleWords))
@@ -108,7 +110,6 @@ object TextPipeline {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("title"))
-      .orderBy("doc_id")
   }
 
   /** Incremental delta detection BY CONTENT: the rows of `incoming`

@@ -55,7 +55,8 @@ import scala.reflect.runtime.universe.TypeTag
   * follow for a deployment that prefers a final reading over silence.
   *
   * DATA-CONTRACT ASSERTIONS: the indicator streams `require` each
-  * event_id inside the 12-digit order-key domain, and a violation
+  * event_id inside the 12-digit order-key domain and each price inside
+  * the batch bars' |cents| < 5·10⁸ tick domain, and a violation
   * fails the QUERY, not just the key — deliberate: the composite
   * order key is what makes every downstream emission deterministic,
   * so an out-of-domain id means the INGEST contract broke and silent
@@ -1067,12 +1068,18 @@ object StreamingRollups {
             // the boundary instead of diverging from batch parity
             def okey(t: R) = {
               require(t.event_id >= 0 && t.event_id < 1000000000000L,
-                s"event_id ${t.event_id} outside the 12-digit order-key domain")
+                s"event_id ${t.event_id} ${graft.operators.Finance.OrderKeyDomain}")
               f"${micros(t)}%020d${t.event_id}%012d"
             }
-            def cents(v: Double) = java.math.BigDecimal.valueOf(v)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
+            // the batch bars' packed-tick cents bound, checked alike
+            def cents(v: Double) = {
+              val c = java.math.BigDecimal.valueOf(v)
+                .setScale(2, java.math.RoundingMode.HALF_UP)
+                .movePointRight(2).longValueExact()
+              require(math.abs(c) < 500000000L,
+                s"cents $c ${graft.operators.Finance.CentsDomain}")
+              c
+            }
             val sorted = rows.toSeq.sortBy(t => (micros(t), t.event_id))
             val prior = state.getOption
             var bar = prior.map(_.bar).orNull

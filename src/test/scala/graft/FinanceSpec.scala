@@ -21,7 +21,8 @@ class FinanceSpec extends SparkSpec {
       (2L, t("2024-01-02 09:00:00"), 5L, 99.0), // same ts as id=1 → id breaks tie
       (4L, t("2024-01-03 09:00:00"), 5L, 7.0)   // different day
     ).toDF("event_id", "ts", "user_id", "value")
-    val r = Finance.ohlcResample(df).collect()
+    // the bars come in no particular order: sort on the driver
+    val r = Finance.ohlcResample(df).collect().sortBy(_.getAs[String]("period_key"))
     assert(r.length === 2)
     val d2 = r(0)
     assert(d2.getAs[String]("period_key") === "2024-01-02")
@@ -31,6 +32,40 @@ class FinanceSpec extends SparkSpec {
     assert(d2.getAs[Double]("low") === 10.0)
     assert(d2.getAs[Long]("n_obs") === 3L)
     assert(d2.getAs[Double]("sum_value") === 139.0)
+  }
+
+  // The packed-tick domain (Finance.packedTick): a tick outside it
+  // would carry one lane into the next and give a wrong open or close,
+  // so the bar aggregate fails with the named message instead. Checked
+  // through ohlc_resample and through rsi_wilder's daily closes.
+  private def failsWith(domain: String, ticks: Seq[(Long, Timestamp, Long, Double)]): Unit = {
+    import spark.implicits._
+    val df = ticks.toDF("event_id", "ts", "user_id", "value")
+    Seq[() => Any](() => Finance.ohlcResample(df).collect(),
+        () => Finance.rsiWilder(df, n = 2).collect()).foreach { run =>
+      val e = intercept[Exception](run())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage))
+      assert(messages.exists(_.contains(domain)), e.toString)
+    }
+  }
+
+  test("bar ticks: an event_id of 10^12 fails loud, not a wrong open") {
+    failsWith(Finance.OrderKeyDomain, Seq(
+      (1000000000000L, t("2024-01-02 09:00:00"), 5L, 9.0),
+      (1L, t("2024-01-02 10:00:00"), 5L, 1.0)))
+  }
+
+  test("bar ticks: a $6,000,000.00 tick fails loud, not a wrapped open") {
+    failsWith(Finance.CentsDomain, Seq(
+      (1L, t("2024-01-02 09:00:00"), 5L, 6000000.0),
+      (2L, t("2024-01-02 10:00:00"), 5L, 1.0)))
+  }
+
+  test("bar ticks: a tick before 1970 fails loud, not a misordered close") {
+    failsWith(Finance.MicrosDomain, Seq(
+      (1L, t("1969-06-01 09:00:00"), 5L, 9.0),
+      (2L, t("1969-06-01 10:00:00"), 5L, 1.0)))
   }
 
   test("ohlc_resample plans a single hash aggregate — no window sort") {

@@ -293,6 +293,41 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  // The keys of perfbench's etl_batch workload: the reference's ETL DAG
+  // outputs, which it loads into MongoDB collections that have no row
+  // order. Listed here, not imported, so the guard stands on its own.
+  private val etlKeys = Seq(
+    "rollup_daily", "rollup_monthly", "rollup_yearly", "rollup_combined", "rollup_multi",
+    "schema_normalize", "news_transform", "news_transform_bpe", "news_dedup", "kv_extract",
+    "kv_extract_nested", "kv_extract_xml", "financial_metrics", "lang_id", "quality_score",
+    "pii_scrub", "token_count", "ohlc_resample", "rsi_wilder")
+  // The API reads whose answer is an order: title search by date desc,
+  // the two paginated lists, the period inventory and the range read.
+  private val orderedApiKeys = Seq(
+    "api_search", "api_report_list", "api_paginate", "api_period_keys", "api_data_range")
+
+  test("order only where order is the answer: no ETL key range-partitions, the API keys sort") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // a global sort plans a range-partitioning exchange (plus its
+    // bound-sampling job); the helper's collect descends into AQE's
+    // current plan and its query stages, which a plain collect skips
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val ranged = etlKeys.filter { name =>
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+      aqe.collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.nonEmpty
+    }
+    assert(ranged.isEmpty, s"ETL keys that sort globally: ${ranged.mkString(", ")}")
+    val unsorted = orderedApiKeys.filterNot { name =>
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
+        .collectFirst { case s: Sort if s.global => s }.nonEmpty
+    }
+    assert(unsorted.isEmpty, s"API keys without a global sort: ${unsorted.mkString(", ")}")
+  }
+
   test("two-level assignment plans as one compiled expression: no join, no CASE") {
     // the coarse-then-fine argmin is one expression over broadcast
     // books; neither the per-cell CASE fan-out nor a books join may
@@ -373,6 +408,12 @@ class PlanGuardSpec extends SparkSpec {
       case (f, n, c) if c.contains("12-digit order-key domain") => s"$f:$n"
     }
     assert(checks.size === 1, s"order-key domain check at: ${checks.mkString(", ")}")
+    // the message lives in Finance, which the batch bars check too; the
+    // stream side names it in the driver's one require
+    val streamChecks = src.collect {
+      case (f, n, c) if f.startsWith("graft/streaming/") && c.contains("OrderKeyDomain") => s"$f:$n"
+    }
+    assert(streamChecks.size === 1, s"stream order-key checks at: ${streamChecks.mkString(", ")}")
     // a call's owner is the nearest member `def` above it in its file
     val member = """^  (?:private )?def (\w+)""".r
     val owners = src.zipWithIndex.collect {

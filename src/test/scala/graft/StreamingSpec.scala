@@ -226,7 +226,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.Once()).start()
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "sessionizeEventTime did not finish")
     }
     input.addData(
       Event(1L, ts("2024-01-01 00:00:00"), 1.0),
@@ -274,7 +274,7 @@ class StreamingSpec extends SparkSpec {
     val sessions = StreamingRollups.sessionize(input.toDS(), gapMs = 5 * 60 * 1000)
     val q = sessions.writeStream.format("memory").queryName("sess")
       .outputMode("append").trigger(Trigger.Once()).start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "sessionize did not finish")
     val done = spark.table("sess").as[Session].collect()
     // first session (2 events, total 3.0) closed by the arrival of the third
     assert(done.exists(s => s.n_events == 2 && math.abs(s.total_value - 3.0) < 1e-9))
@@ -491,7 +491,7 @@ class StreamingSpec extends SparkSpec {
       watermark = "10 seconds", before = "1 MINUTE", after = "5 MINUTES")
     val q = joined.writeStream.format("memory").queryName("ij")
       .outputMode("append").trigger(Trigger.Once()).start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "intervalJoin did not finish")
     val rows = spark.table("ij")
       .select(col("entity_id"), col("r_value")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -511,7 +511,7 @@ class StreamingSpec extends SparkSpec {
       val q = StreamingRollups.loadStream(
         in.toDF().withColumn("day", to_date(col("ts"))),
         path, Seq("day"), ckpt).trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "loadStream did not finish")
     }
     run(ckpt1, input)
     assert(spark.read.parquet(path).count() === 2)
@@ -661,7 +661,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.Once()).start()
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "rsiStream did not finish")
     }
     // user 1: closes 1.00, 2.00, 1.50, then day 4 opens at 3.00
     input.addData(
@@ -735,7 +735,7 @@ class StreamingSpec extends SparkSpec {
         val q = stream(input.toDS()).writeStream.format("parquet")
           .option("path", out).option("checkpointLocation", ckpt)
           .outputMode("append").trigger(Trigger.Once()).start()
-        q.awaitTermination(120000)
+        assert(q.awaitTermination(120000), s"$name did not finish")
       }
       spark.read.parquet(out)
     }
@@ -789,7 +789,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.Once()).start()
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "heikinAshiStream did not finish")
       spark.read.parquet(out).collect().map(r => r.getAs[String]("day") ->
         ((r.getAs[Double]("ha_open"), r.getAs[Double]("ha_high"),
           r.getAs[Double]("ha_low"), r.getAs[Double]("ha_close")))).toSet
@@ -827,6 +827,25 @@ class StreamingSpec extends SparkSpec {
     val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .flatMap(t => Option(t.getMessage))
     assert(messages.exists(_.contains("12-digit order-key domain")), e.toString)
+  }
+
+  test("day-close driver: a tick outside the cents domain fails the query") {
+    // the batch bars pack cents + 5·10⁸ into a 9-digit lane; the stream
+    // enforces the same bound, so a $6,000,000.00 tick stops the query
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamingRollups.Tick
+    val input = MemoryStream[Tick]
+    input.addData(Tick(1L, 1L, ts("2024-01-01 00:00:00"), 6000000.0))
+    val q = StreamingRollups.movers(input.toDS(), "10 minutes")
+      .writeStream.format("memory").queryName("cents_domain")
+      .outputMode("append").trigger(Trigger.Once()).start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.awaitTermination() finally q.stop()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(messages.exists(_.contains(operators.Finance.CentsDomain)), e.toString)
   }
 
   test("streaming MACD reproduces the batch recursion for every closed day") {
@@ -1059,7 +1078,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingRollups.takedownStream(
       requests.toDF().withColumnRenamed("value", "doc_id"), tbl, ckpt)
       .trigger(Trigger.Once()).start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "takedownStream did not finish")
     val after = operators.Dedup.minhashLshIndexed(spark, tbl, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after === before.filterNot(p => p._1 == victim || p._2 == victim))
@@ -1094,7 +1113,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("doc_id", "text"), strTbl, ck,
         streamId = Some("spec-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "indexAppendStream did not finish")
     }
     runStream(arriving,
       java.nio.file.Files.createTempDirectory("graft_idxapp_ck1").toString)
@@ -1151,7 +1170,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("doc_id", "text"), mhTbl, strTbl, corpus, ck,
         streamId = Some("spec-ups-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "clusterUpsertStream did not finish")
     }
     runStream(java.nio.file.Files.createTempDirectory("graft_ups_ck1").toString)
     def liveRows(t: String) = operators.Dedup.liveClusterRows(spark, t)
@@ -1201,7 +1220,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("vec_id", "embedding"), ivf, strTbl, ck,
         streamId = Some("spec-sem-ups-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "semanticUpsertStream did not finish")
     }
     runStream(java.nio.file.Files.createTempDirectory("graft_sups_ck1").toString)
     def liveRows(t: String) = operators.Dedup.liveClusterRows(spark, t)
@@ -1233,7 +1252,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("vec_id", "embedding"), strDir, ck,
         streamId = Some("spec-ivf2-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "ivfTwoLevelAppendStream did not finish")
     }
     runStream(java.nio.file.Files.createTempDirectory("g_ivf2_ck1").toString)
     def assigned(dir: String) = spark.read.parquet(s"$dir/assigned")
@@ -1512,7 +1531,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("vec_id", "embedding"), strDir, strTbl, ck,
         streamId = Some("spec-cur-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "semanticCurationStream did not finish")
     }
     runStream(java.nio.file.Files.createTempDirectory("g_cur_ck1").toString)
     def liveIdx(dir: String) = sources.IndexMaintenance
@@ -1566,7 +1585,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("doc_id", "text"), strTbl, ck,
         streamId = Some("spec-bm25-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "bm25AppendStream did not finish")
     }
     def stamp(t: String): (Long, Long) = {
       val p = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
@@ -1621,7 +1640,7 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("vec_id", "embedding", "label"), strDir, ck,
         streamId = Some("spec-ivf-stream"))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "ivfAppendStream did not finish")
     }
     def assigned(dir: String) = spark.read.parquet(s"$dir/assigned")
       .select("vec_id", "list_id").collect()
@@ -1670,7 +1689,7 @@ class StreamingSpec extends SparkSpec {
         java.nio.file.Files.createTempDirectory(s"g_admit_$sid").toString,
         streamId = Some(sid))
         .trigger(Trigger.Once()).start()
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "semanticAdmissionStream did not finish")
     }
     // batch 1: v100 is novel (a two-axis diagonal — cosine ~0.7 to any
     // residue axis, above no list's member at >= 0.35? it lands in ONE
