@@ -1064,20 +1064,20 @@ object Analytics {
     // cents via decimal, not double*100→long: Spark's double→long cast
     // truncates while DuckDB's rounds, and 12.34*100 is 1233.999… in
     // binary — the decimal route is exact and identical in both
-    // PACKED-DECIMAL arg-min (the Finance.packedTick pattern):
-    // pk = cents·10¹² + suppkey, min(pk) mod 10¹² = the cheapest
-    // supplier with the suppkey tie-break — the same lexicographic
-    // (cents, suppkey) order the old padded-string min_by key encoded
-    // (both lanes non-negative, suppkey < 10¹² like its lpad width),
-    // but a decimal(38,0) buffer keeps the whole fact aggregate in
-    // codegen'd HashAggregate where the string-keyed min_by buffer
-    // forced SortAggregate (a sort of the full scan, twice). The
-    // oracle keeps its string form; the winner is identical.
-    val packed =
-      (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-        .cast("decimal(26,0)") * lit(1000000000000L) + col("l_suppkey")
+    // PACKED-DECIMAL arg-min (Finance.packedKey): pk = cents·10¹² +
+    // suppkey, its min's floor remainder = the cheapest supplier with
+    // the suppkey tie-break — the same lexicographic (cents, suppkey)
+    // order the old padded-string min_by key encoded, negative prices
+    // included, but a decimal(38,0) buffer keeps the whole fact
+    // aggregate in codegen'd HashAggregate where the string-keyed min_by
+    // buffer forced SortAggregate (a sort of the full scan, twice). A
+    // suppkey outside [0, 10¹²) fails by name. The oracle keeps its
+    // string form; the winner is identical.
+    val packed = Finance.packedKey(
+      (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"),
+      col("l_suppkey"), "l_suppkey")
     val best = lineitem.groupBy(col("l_partkey"))
-      .agg((min(packed) % lit(1000000000000L)).cast("long").as("s_suppkey"),
+      .agg(Finance.unpackKey(min(packed)).as("s_suppkey"),
         round(min(col("l_extendedprice")), 2).as("best_price"))
     best.join(supplier, best("s_suppkey") === supplier("s_suppkey"))
       .select(col("l_partkey"), best("s_suppkey").as("suppkey"),

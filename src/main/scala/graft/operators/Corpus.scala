@@ -562,7 +562,7 @@ object Corpus {
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        table: String, numBuckets: Int = 8): Unit = {
     graft.sources.IndexMaintenance.compact(spark, table) { (live, tmp) =>
-      graft.sources.Sinks.writeBucketed(live, tmp, Seq("word"), numBuckets)
+      graft.sources.Sinks.rewriteBucketed(live, tmp, Seq("word"), numBuckets)
     }
     repairBm25Stats(spark, table)
     ()

@@ -314,7 +314,7 @@ object Dedup {
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, numBuckets: Int = 8): Unit =
     graft.sources.IndexMaintenance.compact(spark, table) { (live, tmp) =>
-      graft.sources.Sinks.writeBucketed(live, tmp, Seq("band", "band_hash"), numBuckets)
+      graft.sources.Sinks.rewriteBucketed(live, tmp, Seq("band", "band_hash"), numBuckets)
     }
 
   /** Takedown for the containment token index — same tombstone
@@ -328,7 +328,7 @@ object Dedup {
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
                               table: String, numBuckets: Int = 8): Unit =
     graft.sources.IndexMaintenance.compact(spark, table) { (live, tmp) =>
-      graft.sources.Sinks.writeBucketed(live, tmp, Seq("h"), numBuckets)
+      graft.sources.Sinks.rewriteBucketed(live, tmp, Seq("h"), numBuckets)
     }
 
   /** Takedown for the cluster assignment index — honored by
@@ -393,8 +393,9 @@ object Dedup {
     * side is the pre-bucketed index table, so the bucket join shuffles
     * the batch's bands into the index's existing layout and the corpus
     * text is consulted only for the candidates' Jaccard verification.
-    * Output: (new_doc_id, corpus_doc_id, jaccard ≥ threshold) pairs —
-    * empty means the whole batch is novel.
+    * Output: (new_doc_id, corpus_doc_id, jaccard ≥ threshold) pairs in
+    * no particular order (a caller that needs one sorts) — empty means
+    * the whole batch is novel.
     */
   def minhashLshAgainstIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                              newDocs: DataFrame, corpus: DataFrame, k: Int = 5,
@@ -413,7 +414,6 @@ object Dedup {
       .withColumn("jaccard", HashExprs.jaccardText(col("nt_a"), col("nt_b"), k, word = false))
       .filter(col("jaccard") >= threshold)
       .select("a", "b", "jaccard")
-      .orderBy("a", "b")
   }
 
   /** Near-dup pairs on character 5-shingles (MinHash LSH, Jaccard
@@ -1293,7 +1293,7 @@ object Dedup {
             broadcast(spark.table(staleClusterTable(table)).select("cluster_id")),
             Seq("cluster_id"), "left_anti")
         else live
-      graft.sources.Sinks.writeBucketed(
+      graft.sources.Sinks.rewriteBucketed(
         liveMinusStale, tmp, Seq("cluster_id"), numBuckets)
     }
     spark.sql(s"DROP TABLE IF EXISTS ${staleClusterTable(table)}")
@@ -1906,6 +1906,6 @@ object Dedup {
   def compactEmbedBandIndex(spark: org.apache.spark.sql.SparkSession,
                             table: String, numBuckets: Int = 8): Unit =
     graft.sources.IndexMaintenance.compact(spark, table, "vec_id") { (live, tmp) =>
-      graft.sources.Sinks.writeBucketed(live, tmp, Seq("band", "bucket"), numBuckets)
+      graft.sources.Sinks.rewriteBucketed(live, tmp, Seq("band", "bucket"), numBuckets)
     }
 }

@@ -73,10 +73,10 @@ object Finance {
   // a lane would carry into its neighbour and yield a wrong open or
   // close, so the query fails with a named error. The id and cents
   // messages are the stream day-close driver's.
+  private def fail(what: String, v: Column, domain: String): Column =
+    raise_error(concat(lit(s"$what "), v.cast("string"), lit(s" $domain")))
   private def packedTick(ts: Column, id: Column, cents: Column): Column = {
     val us = unix_micros(ts)
-    def fail(what: String, v: Column, domain: String) =
-      raise_error(concat(lit(s"$what "), v.cast("string"), lit(s" $domain")))
     when(us < 0L || us >= 10000000000000000L, fail("tick micros", us, MicrosDomain))
       .when(id < 0L || id >= 1000000000000L, fail("event_id", id, OrderKeyDomain))
       .when(abs(cents) >= 500000000L, fail("cents", cents, CentsDomain))
@@ -84,6 +84,19 @@ object Finance {
         id.cast("long")) * lit(1000000000L) +
         (cents.cast("long") + lit(500000000L)))
   }
+  /** The two-lane form of the packed key, for an arg-extremum over a
+    * (major, key) order: pk = major·10¹² + key, one decimal(38,0) per row
+    * whose max (min) is the row with the largest (smallest) major, ties
+    * to the larger (smaller) key. Any long `major` keeps that order,
+    * negative ones too, and [[unpackKey]] takes the key back with a floor
+    * remainder; a `key` outside [0, 10¹²) would carry into the major
+    * lane, so it fails with the named `what` and [[OrderKeyDomain]].
+    */
+  private[operators] def packedKey(major: Column, key: Column, what: String): Column =
+    when(key < 0L || key >= 1000000000000L, fail(what, key, OrderKeyDomain))
+      .otherwise(major.cast("decimal(20,0)") * lit(1000000000000L) + key.cast("long"))
+  private[operators] def unpackKey(pk: Column): Column =
+    pmod(pk, lit(1000000000000L)).cast("long")
   private def unpackCents(pk: Column): Column =
     (pk % lit(1000000000L)).cast("long") - lit(500000000L)
   /** Cents of round(value, 2) — the exact integer basis every bar leg

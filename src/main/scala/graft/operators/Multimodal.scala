@@ -367,7 +367,7 @@ object Multimodal {
   def compactMediaPhashIndex(spark: org.apache.spark.sql.SparkSession,
                              table: String, numBuckets: Int = 8): Unit =
     graft.sources.IndexMaintenance.compact(spark, table, "media_id") { (live, tmp) =>
-      graft.sources.Sinks.writeBucketed(live, tmp,
+      graft.sources.Sinks.rewriteBucketed(live, tmp,
         Seq("band", "bucket", "modality"), numBuckets)
     }
 

@@ -275,18 +275,17 @@ object Temporal {
     */
   def attributionLastTouch(clicks: DataFrame, purchases: DataFrame,
                            days: Int): DataFrame = {
-    // PACKED-DECIMAL arg-max (the Finance.packedTick pattern):
-    // pk = micros·10¹² + a_key, max(pk) mod 10¹² = the latest click
-    // with the a_key tie-break — the same lexicographic order the old
-    // padded-string max_by key encoded (both lanes non-negative,
-    // a_key < 10¹² like its lpad width), but a decimal(38,0) buffer
-    // keeps the pair aggregate in codegen'd HashAggregate where the
-    // string-keyed max_by buffer forced SortAggregate
-    val packed = unix_micros(col("a_date")).cast("decimal(20,0)") *
-      lit(1000000000000L) + col("a_key")
+    // PACKED-DECIMAL arg-max (Finance.packedKey): pk = micros·10¹² +
+    // a_key, its max's floor remainder = the latest click with the
+    // a_key tie-break — the same lexicographic order the old
+    // padded-string max_by key encoded, clicks before 1970 included, but
+    // a decimal(38,0) buffer keeps the pair aggregate in codegen'd
+    // HashAggregate where the string-keyed max_by buffer forced
+    // SortAggregate. An a_key outside [0, 10¹²) fails by name.
+    val packed = Finance.packedKey(unix_micros(col("a_date")), col("a_key"), "a_key")
     rangeJoinPairs(clicks, purchases, days)
       .groupBy(col("b_key"))
-      .agg((max(packed) % lit(1000000000000L)).cast("long").as("click_id"),
+      .agg(Finance.unpackKey(max(packed)).as("click_id"),
         first(col("b_val")).as("b_val"))
       .groupBy("click_id")
       .agg(count(lit(1)).as("n_purchases"),

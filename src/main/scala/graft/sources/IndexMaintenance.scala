@@ -618,80 +618,106 @@ object IndexMaintenance {
     else t
   }
 
-  /** Swap `tmp` in as `dataDir` WITHOUT ever deleting the last copy:
-    * rename the served dir aside (`_compact_old`), rename tmp in, then
-    * drop the old copy. Every crash point leaves at least one complete
-    * copy on disk, and [[recoverDirSwap]] rolls the swap forward (or
-    * back) from any interleaving — the delete-then-rename it replaces
-    * had a window where a crash left NO data and the documented
-    * recovery action (re-run) started from an empty dir.
+  /** The two siblings a compaction swap uses beside a served dir or
+    * table: `_compact_tmp`, where the fresh copy is written, and
+    * `_compact_old`, where the served copy is set aside while the fresh
+    * one renames in. Every swap, path or catalog, takes its names here.
+    */
+  private[graft] def swapSiblings(served: String): (String, String) = {
+    val base = served.stripSuffix("/")
+    (s"${base}_compact_tmp", s"${base}_compact_old")
+  }
+
+  /** `sub` (a relative path; "" is the root itself) under `root`. */
+  private[graft] def subDir(root: String, sub: String): org.apache.hadoop.fs.Path =
+    if (sub.isEmpty) new org.apache.hadoop.fs.Path(root)
+    else new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root), sub)
+
+  /** Swap the fresh copies of `subs` in, one sub-dir at a time, WITHOUT
+    * ever deleting the last copy of any. A sub is a path relative to
+    * `dataDir` — a partition such as `a=1/b=2`, or "" for the whole dir —
+    * and its fresh copy sits at the same sub-path under `dataDir`'s
+    * `_compact_tmp` sibling. Per sub: rename the served copy aside to the
+    * same sub-path under `_compact_old`, rename the fresh copy in, drop
+    * the aside copy; then the emptied siblings go. So at most one sub is
+    * mid-swap at any instant, every crash point leaves each sub with one
+    * complete copy on disk, and [[recoverDirSwap]] settles any
+    * interleaving. Subs not named keep their files untouched.
     */
   private[graft] def swapDirIn(f: org.apache.hadoop.fs.FileSystem,
-                               dataDir: String, tmp: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val old = s"${dataDir.stripSuffix("/")}_compact_old"
-    require(f.exists(p(tmp)), s"swapDirIn: fresh copy missing at $tmp")
-    require(!f.exists(p(old)),
+                               dataDir: String, subs: Seq[String]): Unit = {
+    val (tmp, old) = swapSiblings(dataDir)
+    require(!f.exists(subDir(old, "")),
       s"swapDirIn: unrecovered predecessor swap at $old — run recoverDirSwap first")
-    require(f.rename(p(dataDir), p(old)), s"swap rename failed: $dataDir -> $old")
-    require(f.rename(p(tmp), p(dataDir)), s"swap rename failed: $tmp -> $dataDir")
-    f.delete(p(old), true)
+    subs.foreach { sub =>
+      val (served, fresh, aside) = (subDir(dataDir, sub), subDir(tmp, sub), subDir(old, sub))
+      require(f.exists(fresh), s"swapDirIn: fresh copy missing at $fresh")
+      f.mkdirs(aside.getParent)
+      require(f.rename(served, aside), s"swap rename failed: $served -> $aside")
+      require(f.rename(fresh, served), s"swap rename failed: $fresh -> $served")
+      f.delete(aside, true)
+    }
+    f.delete(subDir(old, ""), true)
+    f.delete(subDir(tmp, ""), true)
     ()
   }
 
   /** Recover a [[swapDirIn]] a crash interrupted — called on entry by
     * every compaction (and safe to call any time: no leftovers → no-op).
-    * States and actions, by the swap's invariants (`_old` appears only
-    * after the fresh copy is COMPLETE; `tmp` disappears the instant the
-    * fresh copy is serving):
-    *  - `_old` present, dataDir absent, tmp present → the fresh copy was
-    *    complete: roll FORWARD (rename tmp in, drop `_old`);
-    *  - `_old` present, dataDir absent, tmp absent → cannot happen
-    *    mid-protocol, but if found (manual surgery) roll BACK so data
-    *    serves again;
-    *  - `_old` and dataDir both present → crash after the swap: drop
-    *    `_old`;
-    *  - tmp present alone → a rewrite that never reached the swap (tmp
-    *    possibly partial): drop tmp.
-    * Leftover tombstones after a rolled-forward swap are INERT (their
-    * ids are no longer in the data, so the live-view anti-join is a
-    * no-op) and fold away on the next compaction.
+    * The swap's invariants: a sub's aside copy appears only after every
+    * fresh copy is COMPLETE, and a fresh copy leaves `_compact_tmp` the
+    * instant it serves. Walking `_compact_old` from its root, per sub:
+    *  - served copy absent, fresh present → crash between the sub's two
+    *    renames: roll FORWARD (rename the fresh copy in);
+    *  - served and fresh both absent → cannot happen mid-protocol, but
+    *    if found (manual surgery) roll BACK so the aside copy serves;
+    *  - served and fresh both present → a container of per-partition
+    *    swaps (the table root, or `a=1` above `a=1/b=2`): settle its
+    *    children;
+    *  - served present, fresh absent → that sub's swap completed (or,
+    *    for the whole dir, the crash fell after both renames): nothing.
+    * Then `_compact_old` drops, and so does `_compact_tmp`: what is left
+    * there is a rewrite that never reached the swap, or fresh copies of
+    * subs whose swap had not started — their served copies are complete,
+    * so a crash after k of n partition swaps serves k compacted and n−k
+    * fragmented partitions, each once, and the next run compacts the
+    * rest. Leftover tombstones after a rolled-forward swap are INERT
+    * (their ids are no longer in the data, so the live-view anti-join is
+    * a no-op) and fold away on the next compaction.
     */
   private[graft] def recoverDirSwap(f: org.apache.hadoop.fs.FileSystem,
                                     dataDir: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val old = s"${dataDir.stripSuffix("/")}_compact_old"
-    val tmp = s"${dataDir.stripSuffix("/")}_compact_tmp"
-    if (f.exists(p(old))) {
-      if (!f.exists(p(dataDir))) {
-        if (f.exists(p(tmp)))
-          require(f.rename(p(tmp), p(dataDir)),
-            s"swap roll-forward rename failed: $tmp -> $dataDir")
-        else
-          require(f.rename(p(old), p(dataDir)),
-            s"swap roll-back rename failed: $old -> $dataDir")
-      }
-      f.delete(p(old), true)
+    val (tmp, old) = swapSiblings(dataDir)
+    def settle(sub: String): Unit = {
+      val (served, fresh, aside) = (subDir(dataDir, sub), subDir(tmp, sub), subDir(old, sub))
+      if (!f.exists(served)) {
+        val from = if (f.exists(fresh)) fresh else aside
+        require(f.rename(from, served), s"swap recovery rename failed: $from -> $served")
+      } else if (f.exists(fresh))
+        f.listStatus(aside).filter(_.isDirectory)
+          .foreach(c => settle(s"$sub/${c.getPath.getName}".stripPrefix("/")))
     }
-    f.delete(p(tmp), true)
+    if (f.exists(subDir(old, ""))) settle("")
+    f.delete(subDir(old, ""), true)
+    f.delete(subDir(tmp, ""), true)
     ()
   }
 
   /** Fold a path-based index's tombstones in: `rewrite` materializes
-    * the live rows to a sibling tmp dir (the caller's layout —
-    * partitioning etc), which then swaps in via the crash-safe
-    * [[swapDirIn]] protocol (a leftover from an interrupted predecessor
-    * is recovered on entry); the tombstones drop last — a crash before
-    * that leaves them inert against the compacted data.
+    * the live rows to the `_compact_tmp` sibling (the caller's layout —
+    * partitioning etc), which then swaps in whole (the empty sub-path)
+    * via the crash-safe [[swapDirIn]] protocol (a leftover from an
+    * interrupted predecessor is recovered on entry); the tombstones drop
+    * last — a crash before that leaves them inert against the compacted
+    * data.
     */
   def compactAt(spark: SparkSession, dataDir: String, indexDir: String,
                 idCol: String)(rewrite: (DataFrame, String) => Unit): Unit =
                 withWriterLeaseAt(spark, indexDir) {
-    val tmp = s"${dataDir.stripSuffix("/")}_compact_tmp"
     val f = fsFor(spark, dataDir)
     recoverDirSwap(f, dataDir)
-    rewrite(liveRowsAt(spark, dataDir, indexDir, idCol), tmp)
-    swapDirIn(f, dataDir, tmp)
+    rewrite(liveRowsAt(spark, dataDir, indexDir, idCol), swapSiblings(dataDir)._1)
+    swapDirIn(f, dataDir, Seq(""))
     f.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
     ()
   }
@@ -703,8 +729,7 @@ object IndexMaintenance {
     * Called on entry by every table compaction; no leftovers → no-op.
     */
   private[graft] def recoverTableSwap(spark: SparkSession, table: String): Unit = {
-    val tmp = s"${table}_compact_tmp"
-    val old = s"${table}_compact_old"
+    val (tmp, old) = swapSiblings(table)
     if (spark.catalog.tableExists(old)) {
       if (!spark.catalog.tableExists(table)) {
         if (spark.catalog.tableExists(tmp))
@@ -743,8 +768,7 @@ object IndexMaintenance {
     val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
       .filter { case (key, _) => key.startsWith("graft.") }
-    val tmp = s"${table}_compact_tmp"
-    val old = s"${table}_compact_old"
+    val (tmp, old) = swapSiblings(table)
     rewrite(liveRows(spark, table, idCol), tmp)
     if (props.nonEmpty) spark.sql(
       s"ALTER TABLE $tmp SET TBLPROPERTIES " +

@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.PartitioningUtils
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
 /** Load-stage sinks: partitioned parquet layout.
   *
@@ -74,32 +78,55 @@ object Sinks {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Small-file compaction: rewrite a partitioned table's data with a
-    * bounded number of files per partition. Incremental per-period
-    * loads accumulate one-file-per-task fragments; at 100 TB the
-    * resulting millions of small files dominate scan open/seek cost
-    * and NameNode/listing pressure. One clustered rewrite restores
-    * few-large-files layout; run it on cold partitions out of band.
+  /** Small-file compaction: rewrite each FRAGMENTED partition of a
+    * partitioned table — one holding more than one data file — as one
+    * file, and leave every other partition's files as they are.
+    * Incremental per-period loads accumulate one-file-per-task fragments;
+    * at 100 TB the resulting millions of small files dominate scan
+    * open/seek cost and NameNode/listing pressure, while an already
+    * compact partition (the clustered write's and each one-period
+    * upsert's output) gains nothing from a rewrite.
+    *
+    * The driver lists the leaf partition dirs with Spark's hidden-name
+    * rule. No fragmented partition → no Spark job and no file touched.
+    * Otherwise the fragmented partitions are read through a partition
+    * filter (partition values as the directory names' raw strings, so
+    * the rewrite lands under the same names), clustered on the partition
+    * columns (each value lands in one task → one file) and written under
+    * the `_compact_tmp` sibling; then each swaps in by itself through
+    * [[IndexMaintenance.swapDirIn]]'s rename protocol. A crash anywhere
+    * leaves every partition served by exactly one complete copy: before
+    * the swap, the old files; after k of n partition swaps, k compacted
+    * partitions and n−k fragmented ones; between one partition's two
+    * renames, its fresh copy, which [[IndexMaintenance.recoverDirSwap]]
+    * (run on entry, under the writer lease) rolls in. A re-run compacts
+    * whatever is still fragmented.
     */
   def compact(spark: SparkSession, path: String, partitionCols: Seq[String]): Unit =
-    // the lease file sits BESIDE the dir (the dir itself is swapped)
+    // the lease file sits BESIDE the dir (its partitions are swapped)
     IndexMaintenance.withWriterLease(
       spark, path.stripSuffix("/") + "_writer_lease") {
     val fs = IndexMaintenance.fsFor(spark, path)
     // roll forward/back a predecessor swap a crash interrupted BEFORE
-    // reading — the read must see a complete serving copy
+    // listing — the listing must see one complete copy per partition
     IndexMaintenance.recoverDirSwap(fs, path)
-    val tmp = path.stripSuffix("/") + "_compact_tmp"
-    val df = Tables.parquet(spark, path)
-    val parts = partitionCols.map(df.col)
-    // hash-clustering on the partition columns lands each partition
-    // value in one task → one file per directory (for a partition too
-    // big for one file, range-repartition on (partition cols, a salt))
-    df.repartition(parts: _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp)
-    // swap without ever deleting the last copy (on an object store this
-    // would be a manifest commit; locally, the _old rename protocol)
-    IndexMaintenance.swapDirIn(fs, path, tmp)
+    val fragmented = Tables.leafFiles(fs, new Path(path))
+      .filterNot { case (_, f) => Tables.summaryFiles(f.getPath.getName) }
+      .groupBy(_._1).collect { case (sub, files) if files.size > 1 => sub }.toSeq.sorted
+    if (fragmented.nonEmpty) {
+      val tmp = IndexMaintenance.swapSiblings(path)._1
+      // one conjunction of `col = raw value` per fragmented partition
+      val keep = fragmented.map(PartitioningUtils.parsePathFragmentAsSeq(_).map {
+        case (c, v) =>
+          if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) col(c).isNull else col(c) === v
+      }.foldLeft(lit(true))(_ && _)).reduce(_ || _)
+      val df = Tables.parquet(spark, path, partitionCols).filter(keep)
+      df.repartition(partitionCols.map(df.col): _*)
+        .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp)
+      // a partition whose files held no row has no fresh copy: left as is
+      IndexMaintenance.swapDirIn(fs, path,
+        fragmented.filter(sub => fs.exists(IndexMaintenance.subDir(tmp, sub))))
+    }
   }
 
   /** Materialize a training EPOCH on disk: the documents with their
@@ -195,6 +222,22 @@ object Sinks {
   def appendBucketed(df: DataFrame, table: String,
                      bucketCols: Seq[String], numBuckets: Int): Unit =
     bucketed(df, table, bucketCols, numBuckets, "append")
+
+  /** The compaction rewrite of a bucketed index: [[writeBucketed]] after
+    * shuffling each row to the task numbered by its bucket id, Spark's
+    * `pmod(murmur3(bucket cols), numBuckets)`, so each task holds one
+    * bucket and writes its one file; without it, every read task writes
+    * a file per bucket it meets. A plain `repartition` on the bucket
+    * columns does not do it: a bucketed source already reports that hash
+    * partitioning, so Spark drops the shuffle as redundant and then
+    * un-buckets the scan. Every index family's compaction rewrites
+    * through here.
+    */
+  def rewriteBucketed(df: DataFrame, table: String,
+                      bucketCols: Seq[String], numBuckets: Int): Unit =
+    writeBucketed(
+      df.repartitionById(numBuckets, pmod(hash(bucketCols.map(df.col): _*), lit(numBuckets))),
+      table, bucketCols, numBuckets)
 
   private def bucketed(df: DataFrame, table: String, bucketCols: Seq[String],
                        numBuckets: Int, mode: String): Unit =

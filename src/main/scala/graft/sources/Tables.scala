@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Parquet table loaders for the TPC-H-ish test corpus.
   *
@@ -52,38 +52,56 @@ object Tables {
     * visible. [[Sinks.readMerged]] must read every footer and stays on
     * Spark's `mergeSchema` path.
     */
-  def parquet(spark: SparkSession, path: String): DataFrame =
+  def parquet(spark: SparkSession, path: String): DataFrame = parquet(spark, path, Nil)
+
+  /** [[parquet]] with the partition columns `rawPartitions` typed as
+    * strings: each row carries its directory name's value exactly
+    * (unescaped; the default partition reads null) instead of Spark's
+    * inferred type, so a rewrite partitioned by them writes back the very
+    * directory names it read (an inferred `a=007` would come back as
+    * `a=7`).
+    */
+  private[sources] def parquet(spark: SparkSession, path: String,
+                               rawPartitions: Seq[String]): DataFrame =
     footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case Some(schema) =>
+        spark.read.schema(rawPartitions.foldLeft(schema)(_.add(_, StringType))).parquet(path)
       case None => spark.read.parquet(path)
     }
+
+  /** The files Spark's file index serves under the dir `root`, each with
+    * its dir relative to `root` ("" for `root` itself): hidden names are
+    * skipped and only `col=value` dirs are descended. */
+  private[sources] def leafFiles(fs: FileSystem, root: Path): Seq[(String, FileStatus)] = {
+    def walk(dir: Path, sub: String): Seq[(String, FileStatus)] =
+      fs.listStatus(dir).toSeq
+        .filterNot(c => GraftSqlBridge.isHiddenName(c.getPath.getName))
+        .flatMap { c =>
+          val name = c.getPath.getName
+          if (c.isFile) Seq(sub -> c)
+          else if (name.contains("=")) walk(c.getPath, if (sub.isEmpty) name else s"$sub/$name")
+          // Spark's index serves no file below a non-partition dir
+          else Nil
+        }
+    walk(root, "")
+  }
+
+  /** Parquet summary files: served by the file index, but not data. */
+  private[sources] val summaryFiles = Set("_common_metadata", "_metadata")
 
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
     try {
       val conf = GraftSqlBridge.hadoopConf(spark)
       val root = new Path(path)
       val fs = root.getFileSystem(conf)
-      val partitionKeys = scala.collection.mutable.Set.empty[String]
-      def leaves(dir: Path): Seq[FileStatus] =
-        fs.listStatus(dir).toSeq
-          .filterNot(c => GraftSqlBridge.isHiddenName(c.getPath.getName))
-          .flatMap { c =>
-            val name = c.getPath.getName
-            if (c.isFile) Seq(c)
-            else if (name.contains("=")) {
-              partitionKeys += name.takeWhile(_ != '=').toLowerCase
-              leaves(c.getPath)
-            }
-            // Spark's index serves no file below a non-partition dir
-            else Nil
-          }
       val top = fs.getFileStatus(root)
-      val files = (if (top.isDirectory) leaves(top.getPath) else Seq(top))
-        .sortBy(_.getPath.toString)
+      val leaves = if (top.isDirectory) leafFiles(fs, root) else Seq("" -> top)
+      val partitionKeys = leaves.flatMap(_._1.split("/")).filter(_.nonEmpty)
+        .map(_.takeWhile(_ != '=').toLowerCase).toSet
+      val files = leaves.map(_._2).sortBy(_.getPath.toString)
       def named(n: String) = files.find(_.getPath.getName == n)
-      val summaries = Set("_common_metadata", "_metadata")
       named("_common_metadata").orElse(named("_metadata"))
-        .orElse(files.find(f => !summaries(f.getPath.getName)))
+        .orElse(files.find(f => !summaryFiles(f.getPath.getName)))
         .map { f =>
           val footer = ParquetFooterReader.readFooter(
             HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)

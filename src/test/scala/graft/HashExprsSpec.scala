@@ -1094,6 +1094,41 @@ class HashExprsSpec extends SparkSpec {
       .map(_.getAs[Long]("doc_id")).toSet.contains(bVictim) === false)
   }
 
+  test("index compaction lands one file per bucket") {
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    // bucket id of every data file of the table
+    def fileBuckets(t: String): Seq[Int] =
+      new java.io.File(wh, t).listFiles().map(_.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+        .map(n => BucketingUtils.getBucketId(n).getOrElse(fail(s"$t: unbucketed file $n")))
+    def spread(t: String): Map[Int, Int] =
+      fileBuckets(t).groupBy(identity).map { case (b, fs) => b -> fs.size }
+    val corpus = sources.Tables.documents(spark, sfDir)
+    val (even, odd) = (corpus.filter(col("doc_id") % 2 === 0), corpus.filter(col("doc_id") % 2 === 1))
+    Seq[(String, String => Unit, String => Unit, String => Unit)](
+      ("g_minhash_idx_onefile", operators.Dedup.writeMinhashIndex(even, _),
+        operators.Dedup.appendToMinhashIndex(odd, _), operators.Dedup.compactMinhashIndex(spark, _)),
+      ("g_bm25_idx_onefile", operators.Corpus.writeBm25Index(even, _),
+        operators.Corpus.appendToBm25Index(odd, _), operators.Corpus.compactBm25Index(spark, _))
+    ).foreach { case (t, write, append, compact) =>
+      Seq(t, s"${t}_tombstones", s"${t}_compact_tmp").foreach { n =>
+        spark.sql(s"DROP TABLE IF EXISTS $n")
+        rm(new java.io.File(wh, n))
+      }
+      write(t); append(t)
+      assert(spread(t).values.exists(_ > 1), s"$t: the append should add a file to a bucket")
+      compact(t)
+      val after = spread(t)
+      assert(after.nonEmpty && after.values.forall(_ == 1),
+        s"$t: files per bucket after compaction: $after")
+    }
+  }
+
   test("incremental dedup flags a re-crawled batch against the persisted index") {
     spark.sql("DROP TABLE IF EXISTS g_minhash_idx_inc")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -1776,6 +1811,81 @@ class HashExprsSpec extends SparkSpec {
     assert(tableIds() === (0L until 8L).toSet)
     assert(!spark.catalog.tableExists(tOld))
     Seq(t, s"${t}_tombstones").foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+  }
+
+  test("compaction swap per partition: a crash at any step keeps one complete copy of each") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import scala.jdk.CollectionConverters._
+    // The per-partition form of the path swap (Sinks.compact): two-level
+    // partitions a=/b=, every one fragmented (two files), a fresh
+    // one-file copy of each under _compact_tmp. A file system that
+    // crashes at its i-th rename/delete/mkdirs stops swapDirIn at every
+    // step in turn: before any swap (tmp alone), after k of n partition
+    // swaps, between one partition's two renames, before the aside copy
+    // or a sibling drops. In each state every partition still has one
+    // complete copy — served, or fresh and rolled in by recovery — and
+    // after recovery and a re-run, each serves its rows once, one file.
+    val base = java.nio.file.Files.createTempDirectory("g_partswap").toString
+    val (pristine, freshCopy, dataDir) = (s"$base/pristine", s"$base/fresh", s"$base/data")
+    val (tmpDir, oldDir) = (s"${dataDir}_compact_tmp", s"${dataDir}_compact_old")
+    val parts = Seq("a=1/b=1", "a=1/b=2", "a=2/b=1")
+    val rows = (0 until 60).map(i => (i.toLong, 1 + i % 2, 1 + i % 3 % 2, s"v$i"))
+      .filterNot(r => r._2 == 2 && r._3 == 2)
+    rows.grouped(30).foreach(_.toDF("id", "a", "b", "v").coalesce(1)
+      .write.mode("append").partitionBy("a", "b").parquet(pristine))
+    sources.Tables.parquet(spark, pristine).repartition(col("a"), col("b"))
+      .write.partitionBy("a", "b").parquet(freshCopy)
+    def dataFiles(dir: String): Seq[java.nio.file.Path] =
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir))) Nil
+      else java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          p.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.forall(p => dataFiles(s"$pristine/$p").size == 2 &&
+      dataFiles(s"$freshCopy/$p").size == 1))
+    def ids(dir: String): Seq[Long] =
+      if (dataFiles(dir).isEmpty) Nil
+      else sources.Tables.parquet(spark, dir).select("id").as[Long].collect().toSeq.sorted
+    def expected(p: String): Seq[Long] = {
+      val Array(a, b) = p.split("/").map(_.drop(2).toInt)
+      rows.filter(r => r._2 == a && r._3 == b).map(_._1).sorted
+    }
+    val f = sources.IndexMaintenance.fsFor(spark, base)
+    def copy(from: String, to: String): Unit =
+      require(org.apache.hadoop.fs.FileUtil.copy(f, new Path(from), f, new Path(to), false,
+        spark.sparkContext.hadoopConfiguration))
+    class Crash extends RuntimeException("injected crash")
+    class CrashAt(fs: FileSystem, var left: Int) extends FilterFileSystem(fs) {
+      private def step(): Unit = { if (left == 0) throw new Crash; left -= 1 }
+      override def rename(s: Path, d: Path): Boolean = { step(); super.rename(s, d) }
+      override def delete(p: Path, r: Boolean): Boolean = { step(); super.delete(p, r) }
+      override def mkdirs(p: Path): Boolean = { step(); super.mkdirs(p) }
+      override def mkdirs(p: Path, perm: FsPermission): Boolean = { step(); super.mkdirs(p, perm) }
+    }
+    // per partition mkdirs + 2 renames + 1 delete, then both siblings drop
+    val steps = 4 * parts.size + 2
+    (0 to steps).foreach { crashAt =>
+      Seq(dataDir, tmpDir, oldDir).foreach(d => f.delete(new Path(d), true))
+      copy(pristine, dataDir); copy(freshCopy, tmpDir)
+      val crashed = try {
+        sources.IndexMaintenance.swapDirIn(new CrashAt(f, crashAt), dataDir, parts); false
+      } catch { case _: Crash => true }
+      assert(crashed === (crashAt < steps), s"crash point $crashAt")
+      // on disk: each partition served complete, or its fresh copy is
+      // complete and the served one absent (mid-swap)
+      parts.foreach { p =>
+        val copyAt = if (f.exists(new Path(s"$dataDir/$p"))) dataDir else tmpDir
+        assert(ids(s"$copyAt/$p") === expected(p), s"crash point $crashAt, $p in $copyAt")
+      }
+      sources.IndexMaintenance.recoverDirSwap(f, dataDir)
+      assert(!f.exists(new Path(tmpDir)) && !f.exists(new Path(oldDir)), s"crash point $crashAt")
+      parts.foreach(p => assert(ids(s"$dataDir/$p") === expected(p), s"crash point $crashAt, $p"))
+      // the re-run compacts what is still fragmented and converges
+      Sinks.compact(spark, dataDir, Seq("a", "b"))
+      parts.foreach(p => assert(dataFiles(s"$dataDir/$p").size === 1, s"crash point $crashAt, $p"))
+      assert(ids(dataDir) === rows.map(_._1).sorted, s"crash point $crashAt")
+    }
   }
 
   test("maintenance advisor: tombstone pressure drives compact; leftovers and leases drive recover") {

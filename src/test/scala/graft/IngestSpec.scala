@@ -320,4 +320,56 @@ class IngestSpec extends SparkSpec {
     Seq(("7", 1L)).toDF("k", "id").write.parquet(s"$overlap/k=7")
     sameAsSpark(overlap, Tables.parquet(spark, overlap))
   }
+
+  /** Every non-hidden file under `dir`, relative path → length. */
+  private def dataFiles(dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(dir)
+    Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !root.relativize(p).iterator().asScala.exists(n => n.toString.startsWith("_") ||
+          n.toString.startsWith(".")))
+      .map(p => root.relativize(p).toString -> Files.size(p)).toMap
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("compacting an already compact table starts no job and touches no file") {
+    val dir = Files.createTempDirectory("graft_compact_noop").toString + "/t"
+    val src = Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"), col("o_totalprice"),
+        year(col("o_orderdate")).cast("string").as("o_year"))
+    Sinks.writePartitionedClustered(src, dir, Seq("o_year"))
+    val before = dataFiles(dir)
+    assert(before.keys.groupBy(_.takeWhile(_ != '/')).values.forall(_.size == 1),
+      s"the clustered write should leave one file per partition: ${before.keys}")
+    assert(jobsStartedBy(Sinks.compact(spark, dir, Seq("o_year"))) === 0)
+    assert(dataFiles(dir) === before)
+  }
+
+  test("compaction rewrites only the fragmented partition; the others keep their files") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_compact_part").toString + "/t"
+    // values that Spark's inference reads as ints: the rewrite must keep
+    // the directory name `p=01`, not write `p=1`
+    val rows = (1 to 90).map(i => (i.toLong, s"0${i % 3}", i * 0.5))
+    val df = rows.toDF("id", "p", "v")
+    Sinks.writePartitionedClustered(df, dir, Seq("p"))
+    // a second load into p=01 only: that partition now holds two files
+    Seq((1000L, "01", 7.0)).toDF("id", "p", "v")
+      .write.mode("append").partitionBy("p").parquet(dir)
+    val before = dataFiles(dir)
+    def in(files: Map[String, Long], part: String) = files.filter(_._1.startsWith(s"p=$part/"))
+    assert(in(before, "01").size === 2 && in(before, "00").size === 1 && in(before, "02").size === 1)
+    val rowsBefore = sortedRows(Sinks.readPartitioned(spark, dir))
+    Sinks.compact(spark, dir, Seq("p"))
+    val after = dataFiles(dir)
+    assert(in(after, "00") === in(before, "00") && in(after, "02") === in(before, "02"))
+    assert(in(after, "01").size === 1 && in(after, "01").keySet != in(before, "01").keySet)
+    assert(after.size === 3, s"a partition renamed or duplicated: ${after.keys}")
+    assert(sortedRows(Sinks.readPartitioned(spark, dir)) === rowsBefore)
+    assert(!Files.exists(Paths.get(s"${dir}_compact_tmp")) &&
+      !Files.exists(Paths.get(s"${dir}_compact_old")))
+  }
 }

@@ -2632,6 +2632,34 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  // The packed (major, key) arg-extremum (Finance.packedKey): a negative
+  // major keeps its order, a key outside 12 digits fails by name
+  private def failsWithOrderKey(run: => Any): Unit = {
+    val e = intercept[Exception](run)
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(messages.exists(_.contains(Finance.OrderKeyDomain)), e.toString)
+  }
+  private def argminInputs(rows: Seq[(Long, Long, Double)]) = {
+    import spark.implicits._
+    (rows.toDF("l_partkey", "l_suppkey", "l_extendedprice"),
+      rows.map(_._2).distinct.map(k => (k, s"Supplier#$k")).toDF("s_suppkey", "s_name"))
+  }
+
+  test("argmin join: a negative price keeps its supplier and the suppkey tie-break") {
+    val (li, supp) = argminInputs(Seq(
+      (1L, 3L, -5.0), (1L, 2L, 10.0),     // part 1: the negative price wins
+      (2L, 7L, -1.25), (2L, 4L, -1.25)))  // part 2: a tie goes to suppkey 4
+    val r = Analytics.cheapestSupplier(li, supp).collect()
+      .map(x => x.getAs[Long]("l_partkey") -> (x.getAs[Long]("suppkey"), x.getAs[Double]("best_price")))
+    assert(r.toMap === Map(1L -> ((3L, -5.0)), 2L -> ((4L, -1.25))))
+  }
+
+  test("argmin join: an l_suppkey of 10^12 fails loud, not an aliased supplier") {
+    val (li, supp) = argminInputs(Seq((1L, 1000000000000L, 5.0), (1L, 2L, 10.0)))
+    failsWithOrderKey(Analytics.cheapestSupplier(li, supp).collect())
+  }
+
   test("latest_by_key equals the rank-1 window row per user") {
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, sfDir)
@@ -2758,6 +2786,31 @@ class OperatorsSpec extends SparkSpec {
         (x.getAs[Long]("n_purchases"), x.getAs[Double]("attributed"))).toMap
     assert(r === Map(11L -> ((2L, 75.0))),
       s"click 11 takes both purchases in full, click 10 nothing: $r")
+  }
+
+  test("last-touch attribution: a click before 1970 keeps its click_id") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    val clicks = Seq(
+      (1L, 10L, Timestamp.valueOf("1969-12-20 00:00:00")),
+      (1L, 11L, Timestamp.valueOf("1969-12-21 12:00:00")))  // the latest
+      .toDF("key", "a_key", "a_date")
+    val purchases = Seq((1L, 100L, Timestamp.valueOf("1969-12-22 00:00:00"), BigDecimal("50.00")))
+      .toDF("key", "b_key", "b_date", "b_val")
+    val r = Temporal.attributionLastTouch(clicks, purchases, 7).collect()
+      .map(x => x.getAs[Long]("click_id") ->
+        (x.getAs[Long]("n_purchases"), x.getAs[Double]("attributed"))).toMap
+    assert(r === Map(11L -> ((1L, 50.0))), s"pre-1970 click lost its id: $r")
+  }
+
+  test("last-touch attribution: an a_key of 10^12 fails loud, not an aliased click") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    val clicks = Seq((1L, 1000000000000L, Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("key", "a_key", "a_date")
+    val purchases = Seq((1L, 100L, Timestamp.valueOf("2024-01-02 00:00:00"), BigDecimal("50.00")))
+      .toDF("key", "b_key", "b_date", "b_val")
+    failsWithOrderKey(Temporal.attributionLastTouch(clicks, purchases, 7).collect())
   }
 
   test("burstiness: periodic gaps score 0 bp, bursty gaps score high") {

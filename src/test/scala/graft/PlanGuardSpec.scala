@@ -314,13 +314,14 @@ class PlanGuardSpec extends SparkSpec {
     // bound-sampling job); the helper's collect descends into AQE's
     // current plan and its query stages, which a plain collect skips
     val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val ranged = etlKeys.filter { name =>
+    // serve_ingest's novelty check collects its pairs into a set
+    val ranged = (etlKeys :+ "dedup_lsh_incremental").filter { name =>
       val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
       aqe.collect(plan) {
         case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
       }.nonEmpty
     }
-    assert(ranged.isEmpty, s"ETL keys that sort globally: ${ranged.mkString(", ")}")
+    assert(ranged.isEmpty, s"unordered keys that sort globally: ${ranged.mkString(", ")}")
     val unsorted = orderedApiKeys.filterNot { name =>
       SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
         .collectFirst { case s: Sort if s.global => s }.nonEmpty
@@ -362,6 +363,20 @@ class PlanGuardSpec extends SparkSpec {
           case (line, i) => (root.relativize(p).toString, i + 1, code(line))
         }
       }
+  }
+
+  /** "file:member" of every code line of `src` that `hit` matches, a
+    * member being the nearest two-space-indented `def` above the line in
+    * its file. */
+  private def owners(src: Seq[(String, Int, String)])(hit: String => Boolean): Seq[String] = {
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    src.zipWithIndex.collect {
+      case ((f, _, c), i) if hit(c) =>
+        val owner = src.take(i).reverseIterator.filter(_._1 == f)
+          .flatMap(l => member.findFirstMatchIn(l._3)).map(_.group(1))
+          .nextOption().getOrElse("?")
+        s"$f:$owner"
+    }
   }
 
   test("src/main opens parquet only through Tables.parquet") {
@@ -414,19 +429,21 @@ class PlanGuardSpec extends SparkSpec {
       case (f, n, c) if f.startsWith("graft/streaming/") && c.contains("OrderKeyDomain") => s"$f:$n"
     }
     assert(streamChecks.size === 1, s"stream order-key checks at: ${streamChecks.mkString(", ")}")
-    // a call's owner is the nearest member `def` above it in its file
-    val member = """^  (?:private )?def (\w+)""".r
-    val owners = src.zipWithIndex.collect {
-      case ((f, n, c), i) if c.contains("flatMapGroupsWithState[") =>
-        val owner = src.take(i).reverseIterator.filter(_._1 == f)
-          .flatMap(l => member.findFirstMatchIn(l._3)).map(_.group(1))
-          .nextOption().getOrElse("?")
-        s"$f:$owner"
-    }
+    val calls = owners(src)(_.contains("flatMapGroupsWithState["))
     val allowed = Seq("dayClose", "sessionize", "sessionizeEventTime", "transitions")
       .map(m => s"graft/streaming/StreamingRollups.scala:$m")
-    assert(owners.sorted === allowed.sorted,
-      s"flatMapGroupsWithState outside the day-close driver and the sessionizers: $owners")
+    assert(calls.sorted === allowed.sorted,
+      s"flatMapGroupsWithState outside the day-close driver and the sessionizers: $calls")
+  }
+
+  test("one compaction swap protocol: the _compact_old name lives in one function") {
+    // Every swap — a whole dir, per partition, a catalog table — takes
+    // its aside name from IndexMaintenance.swapSiblings; a second swap
+    // protocol would spell the name again somewhere under sources/.
+    val src = sourceLines(java.nio.file.Paths.get("src/main/scala/graft/sources"))
+    val spelled = owners(src)(_.contains("_compact_old")).distinct
+    assert(spelled === Seq("IndexMaintenance.scala:swapSiblings"),
+      s"_compact_old spelled in: ${spelled.mkString(", ")}")
   }
 
   test("gate artifacts build once: no ensureDir rewrite, no ensureTable stream restart") {
